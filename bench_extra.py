@@ -13,6 +13,10 @@ Usage::
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
 SPARK_GRAFT_CPUS (default 32) — same contract as bench.py.
+
+Each run is timed with ``perfbench.common.Window``: ``cpu_core_sec`` is
+the CPU time of this process tree (driver, JVM, Python workers), and
+``steal_pct`` the machine's steal share over the run.
 """
 
 from __future__ import annotations
@@ -21,19 +25,8 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-_HZ = os.sysconf("SC_CLK_TCK")
-
-
-def _proc_stat():
-    with open("/proc/stat") as f:
-        v = [int(x) for x in f.readline().split()[1:]]
-    busy = v[0] + v[1] + v[2] + v[5] + v[6]
-    steal = v[7] if len(v) > 7 else 0
-    return busy, steal, busy + v[3] + v[4] + steal
 
 
 def main() -> None:
@@ -49,6 +42,7 @@ def main() -> None:
     from dataflow_mm_lrt_spark import cache
     from dataflow_mm_lrt_spark.contract import EXTRA_QUERIES, QUERIES
     from dataflow_mm_lrt_spark.session import build_session
+    from perfbench.common import Window
 
     q = {**QUERIES, **EXTRA_QUERIES}
     spark = build_session(
@@ -72,15 +66,13 @@ def main() -> None:
         for _ in range(args.runs):
             df = fn(spark, sf_dir)
             spark.sparkContext.setJobDescription(f"bench_extra:{name}")
-            b0, s0, t0 = _proc_stat()
-            w0 = time.time()
+            win = Window()
             df.write.format("noop").mode("overwrite").save()
-            wall = time.time() - w0
-            b1, s1, t1 = _proc_stat()
+            w = win.stop()
             runs.append({
-                "sec": round(wall, 3),
-                "steal_pct": round(100.0 * (s1 - s0) / max(t1 - t0, 1), 2),
-                "cpu_core_sec": round((b1 - b0) / _HZ, 2),
+                "sec": round(w["wall_s"], 3),
+                "steal_pct": round(w["steal_pct"], 2),
+                "cpu_core_sec": round(w["core_s"], 2),
             })
             spark.sparkContext.setJobDescription(None)
         # release AFTER a query's runs, exactly like bench.py — scoped

@@ -92,21 +92,18 @@ def scaling_dataset(sf: float) -> str:
 
 
 def child(cpus: int, sf: float) -> None:
+    from pyspark.sql import functions as F
+
     from dataflow_mm_lrt_spark.session import build_session
     from dataflow_mm_lrt_spark.streaming.run import (
         PipelineConfig,
         clean_stages,
         run_pipeline,
     )
-    from dataflow_mm_lrt_spark.streaming.skew import salted_turn_counts
     from dataflow_mm_lrt_spark.streaming.source import TRANSCRIPT_SCHEMA
+    from perfbench.common import Window
 
     extra = {"spark.sql.files.maxPartitionBytes": str(16 * 1024 * 1024)}
-    # engine default is RocksDB (session.py); =hdfs reverts for the A/B
-    if os.environ.get("SPARK_GRAFT_STATE_PROVIDER", "").lower() == "hdfs":
-        extra["spark.sql.streaming.stateStore.providerClass"] = (
-            "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-        )
     # Shuffle/state partitions are FIXED across legs (2 × the large
     # leg's cores), not scaled with them: a real N→4N executor scale-up
     # runs the SAME job — Spark stateful queries pin
@@ -147,9 +144,9 @@ def child(cpus: int, sf: float) -> None:
     shutil.rmtree(warm_out, ignore_errors=True)
     warm_df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(warm_in)
     clean_stages(warm_df, cfg).write.format("noop").mode("overwrite").save()
-    salted_turn_counts(warm_df, streaming=False).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    warm_df.groupBy(F.window("ts", "5 minutes"), "conv_id").count().write.format(
+        "noop"
+    ).mode("overwrite").save()
     shutil.rmtree(warm_in, ignore_errors=True)
 
     df = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(in_dir)
@@ -163,32 +160,16 @@ def child(cpus: int, sf: float) -> None:
             while fh.read(1 << 24):
                 pass
 
-    def _proc_stat() -> tuple[int, int, int]:
-        """(busy, steal, total) jiffies — same instrument as bench.py:
-        steal_pct marks hypervisor-contaminated windows, cpu_core_sec is
-        the steal-immune work measure (counts Python workers too)."""
-        with open("/proc/stat") as fh:
-            v = [int(x) for x in fh.readline().split()[1:]]
-        busy = v[0] + v[1] + v[2] + v[5] + v[6]
-        steal = v[7] if len(v) > 7 else 0
-        return busy, steal, busy + v[3] + v[4] + steal
-
-    hz = os.sysconf("SC_CLK_TCK")
-
     # ---- timed streaming leg FIRST (the headline metric, measured on the
     # coldest package state this child can offer) -------------------------
     out_dir = f"/tmp/spark_graft_scaling_out_{cpus}_{os.getpid()}"
     shutil.rmtree(out_dir, ignore_errors=True)
-    b0, s0, tt0 = _proc_stat()
-    t0 = time.time()
+    win = Window()
     run_pipeline(spark, in_dir, out_dir, cfg)
-    stream_sec = time.time() - t0
-    b1, s1, tt1 = _proc_stat()
-    stream_steal = round(100.0 * (s1 - s0) / max(tt1 - tt0, 1), 2)
-    stream_cpu = round((b1 - b0) / hz, 1)
+    stream = win.stop()
     shutil.rmtree(out_dir, ignore_errors=True)
 
-    # ---- timed batch leg: clean stages + salted windowed counts ---------
+    # ---- timed batch leg: clean stages + windowed counts ----------------
     # The stream leg just put ~5 min of full 32-core load on the package;
     # without an idle the 32-core batch window starts hot and reads up to
     # 1.6× slow (round-5 driver run: 159 s hot vs 101 s fair start on
@@ -199,28 +180,26 @@ def child(cpus: int, sf: float) -> None:
     cooldown = int(os.environ.get("SPARK_GRAFT_COOLDOWN", "240"))
     if cooldown and cpus == 32:
         time.sleep(cooldown)
-    b0, s0, tt0 = _proc_stat()
-    t0 = time.time()
+    win = Window()
     clean_stages(df, cfg).write.format("noop").mode("overwrite").save()
-    salted_turn_counts(df, streaming=False).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    batch_sec = time.time() - t0
-    b1, s1, tt1 = _proc_stat()
+    df.groupBy(F.window("ts", "5 minutes"), "conv_id").count().write.format(
+        "noop"
+    ).mode("overwrite").save()
+    batch = win.stop()
 
     print(
         json.dumps(
             {
                 "cpus": cpus,
-                "batch_sec": round(batch_sec, 2),
-                "batch_rows_per_sec": round(n_turns / batch_sec, 1),
-                "batch_steal_pct": round(100.0 * (s1 - s0) / max(tt1 - tt0, 1), 2),
-                "batch_cpu_core_sec": round((b1 - b0) / hz, 1),
-                "stream_sec": round(stream_sec, 2),
+                "batch_sec": round(batch["wall_s"], 2),
+                "batch_rows_per_sec": round(n_turns / batch["wall_s"], 1),
+                "batch_steal_pct": round(batch["steal_pct"], 2),
+                "batch_cpu_core_sec": round(batch["core_s"], 1),
+                "stream_sec": round(stream["wall_s"], 2),
                 "turns": n_turns,
-                "stream_turns_per_sec": round(n_turns / stream_sec, 1),
-                "stream_steal_pct": stream_steal,
-                "stream_cpu_core_sec": stream_cpu,
+                "stream_turns_per_sec": round(n_turns / stream["wall_s"], 1),
+                "stream_steal_pct": round(stream["steal_pct"], 2),
+                "stream_cpu_core_sec": round(stream["core_s"], 1),
             }
         )
     )
@@ -407,14 +386,13 @@ equalization (idle siblings kept busy during the small leg) stays on;
 `SPARK_GRAFT_LEG_ORDER=asc SPARK_GRAFT_COOLDOWN=0` reproduces the
 legacy worst-case order.
 
-Steal disclosure (round 6): every timed window records /proc/stat
-deltas — steal_pct is the share of the window the hypervisor withheld
-the vCPU (windows above ~5 % are contaminated and the wall number
-should be read against cpu_core_sec, the steal-immune work measure).
-Caveat: cpu_core_sec is system-wide, so the SMALL leg's value includes
-the frequency-equalization burner spinning on the idle siblings — read
-it for steal diagnosis on that leg, not as a work measure; the 32-core
-leg has no burner and its cpu_core_sec is the honest work number.
+Steal disclosure: every timed window is a perfbench.common.Window —
+steal_pct is the share of the machine's CPU time the hypervisor
+withheld during the window (windows above ~5 % are contaminated and the
+wall number should be read against cpu_core_sec, the steal-immune work
+measure). cpu_core_sec is the CPU time of the leg's own process tree
+(driver, JVM, Python workers), so the equalization burner and any
+co-tenant are not counted in it.
 Co-tenant gate: each leg starts only after a 3 s probe reads <1.5
 busy cores box-wide (waiting up to 10 min), and the residual is
 recorded — pre-leg busy cores: local[{legs[1]}]
@@ -432,7 +410,7 @@ cannot see; the burner itself now self-terminates when orphaned.
 
 speedup 8→32 (4× cores): **{stream_speedup:.2f}×** → scaling efficiency **{stream_eff:.2f}**
 
-## Batch leg (clean stages + salted windowed counts, same input)
+## Batch leg (clean stages + plain 5-minute windowed counts per conv_id, same input)
 
 | parallelism | wall (s) | rows/sec | steal % | cpu core-s |
 |---|---|---|---|---|

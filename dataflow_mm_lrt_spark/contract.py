@@ -72,26 +72,21 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _par_scan(df):
     """Materialized cluster-width spread of a narrow scan (plan barrier).
 
-    The testdata tables are single-row-group parquet files, so a scan is
-    ONE task and every per-row expression chained on it runs on one core
-    (r6 driver artifact: rule_filter 8.5 s wall at 1.3 cores busy). A
+    ``dedup._spread`` decides whether the scan is too narrow (the
+    testdata tables are single-row-group parquet files, so a scan is ONE
+    task and every per-row expression chained on it runs on one core —
+    r6 driver artifact: rule_filter 8.5 s wall at 1.3 cores busy). A
     bare ``repartition`` is not enough for *filters*: Catalyst pushes
     deterministic predicates back below the exchange (verified on the
-    rule_filter plan), so the spread is persisted — the InMemoryRelation
-    is a pushdown barrier — and registered for ``cache.release_all()``.
-    No-op when the scan already has cluster-width splits (files ≥ cores),
-    so at real scale nothing is cached. Projections don't need this
-    barrier; they use ``dedup._spread`` directly."""
+    rule_filter plan), so when ``_spread`` did repartition, the spread is
+    persisted — the InMemoryRelation is a pushdown barrier — and
+    registered for ``cache.release_all()``. When ``_spread`` is a no-op
+    nothing is cached and the predicates reach the scan. Projections
+    don't need this barrier; they use ``dedup._spread`` directly."""
     from . import cache
 
-    p = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        n_files = len(df.inputFiles())
-    except Exception:
-        n_files = 0
-    if n_files >= p:
-        return df
-    return cache.scoped_persist(df.repartition(p))
+    spread = dedup._spread(df)
+    return df if spread is df else cache.scoped_persist(spread)
 
 
 def q_rule_filter(spark, sf_dir):

@@ -81,9 +81,12 @@ def crc8(data: bytes) -> int:
 #: zero-init, no-final-xor CRC is GF(2)-linear in the message, so
 #: crc16(m) = XOR_i _CRC16_DIST[len-1-i][m[i]] — one fancy-index gather
 #: plus an XOR reduction instead of a per-byte Python loop. The table
-#: grows lazily (vectorized one-zero-byte step per row) to the longest
-#: message seen; FLAC frames are a few KB.
+#: grows lazily (vectorized one-zero-byte step per row) up to
+#: _CRC16_DIST_MAX rows (512 B each, 4 MiB at the cap); longer messages
+#: fold in chunks of that size, so the table never depends on the
+#: longest frame seen. FLAC frames are a few KB.
 _CRC16_DIST = _CRC16_TBL.astype(np.uint16)[np.newaxis, :].copy()
+_CRC16_DIST_MAX = 8192
 
 
 def _crc16_dist(n: int) -> np.ndarray:
@@ -104,18 +107,31 @@ def _crc16_dist(n: int) -> np.ndarray:
     return t
 
 
-def crc16(data: bytes) -> int:
+def _crc16_chunk(c: int, data: bytes) -> int:
+    """CRC-16 register after feeding ``data`` to register ``c``."""
     n = len(data)
     if n < 32:  # table/gather overhead beats the loop only past ~32 B
-        c = 0
         tbl = _CRC16_LIST
         for b in data:
             c = tbl[((c >> 8) ^ b) & 0xFF] ^ ((c << 8) & 0xFFFF)
         return c
-    t = _crc16_dist(n)
     arr = np.frombuffer(data, dtype=np.uint8)
+    if c:
+        # a running register c continues the CRC exactly as if it were
+        # XORed into the chunk's first two bytes (MSB-first, 16-bit)
+        arr = arr.copy()
+        arr[0] ^= c >> 8
+        arr[1] ^= c & 0xFF
+    t = _crc16_dist(n)
     contrib = t[np.arange(n - 1, -1, -1), arr]
     return int(np.bitwise_xor.reduce(contrib))
+
+
+def crc16(data: bytes) -> int:
+    c = 0
+    for lo in range(0, len(data), _CRC16_DIST_MAX):
+        c = _crc16_chunk(c, data[lo : lo + _CRC16_DIST_MAX])
+    return c
 
 
 # ---------------------------------------------------------------------------

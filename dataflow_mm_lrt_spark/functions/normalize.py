@@ -1,10 +1,9 @@
 """Text normalization as declarative SQL (dual dialect).
 
-Mirrors ``normalize()`` (rule_base_filter.py:36-56) and the punctuation
-strip of ``TextNormalizer`` (audio_text_normalizer.py:13-17), minus the
-NFD step (no SQL equivalent in DuckDB; the reference-port oracle covers
-NFD, and ``tests/test_normalize.py`` proves the delta is empty on the
-fixture corpus since all fixtures are NFC-invariant ASCII).
+Mirrors ``normalize()`` (rule_base_filter.py:36-56) minus the NFD step
+(no SQL equivalent in DuckDB; the reference-port oracle covers NFD, and
+``tests/test_normalize.py`` proves the delta is empty on the fixture
+corpus since all fixtures are NFC-invariant ASCII).
 """
 
 from __future__ import annotations
@@ -12,12 +11,6 @@ from __future__ import annotations
 import string
 
 from .dialect import DIALECTS
-
-# TextNormalizer PUNCS (audio_text_normalizer.py:13):
-# all common CJK + ASCII punctuation, stripped when remove_puncs=True
-PUNCS_PATTERN = (
-    "[，。！？；：、,.!?;:'\"“”‘’（）()\\[\\]{}《》<>【】…—\\-·/\\\\|@#$%^&*_+=~]"
-)
 
 
 def normalize_sql(dialect: str, t: str) -> str:
@@ -27,12 +20,6 @@ def normalize_sql(dialect: str, t: str) -> str:
     no_punct = f"translate({t}, {d.lit(string.punctuation)}, {d.lit('')})"
     collapsed = d.regexp_replace_all(f"lower({no_punct})", r"\s+", " ")
     return f"trim({collapsed})"
-
-
-def strip_puncs_sql(dialect: str, t: str) -> str:
-    """TextNormalizer remove_puncs step (audio_text_normalizer.py:14-17)."""
-    d = DIALECTS[dialect]
-    return d.regexp_replace_all(t, PUNCS_PATTERN, "")
 
 
 def strip_multimodal_tokens_sql(dialect: str, t: str) -> str:
@@ -68,9 +55,3 @@ def fingerprint_sql(dialect: str, t: str) -> str:
     """Document fingerprint: md5 of the normalized text (stable across
     both dialects; the dedup key used throughout the engine)."""
     return f"md5({normalize_sql(dialect, t)})"
-
-
-def normalize_expr(t: str = "text"):
-    from pyspark.sql import functions as F
-
-    return F.expr(normalize_sql("spark", t))

@@ -68,7 +68,10 @@ def lang_id_sql(dialect: str, t: str) -> str:
 def quality_score_sql(dialect: str, t: str) -> str:
     """Composite quality score in [0,1]: length sufficiency, lexical
     diversity, mean word length sanity. Rounded to 6 dp for stable
-    cross-engine comparison."""
+    cross-engine comparison. Spark's ``round(x, 6)`` rounds the double's
+    decimal string half-up, DuckDB scales by 10⁶ and rounds the product,
+    so the two disagree on decimal half-way values (0.5116875); the
+    Spark rendering spells out DuckDB's scale-round-unscale."""
     d = DIALECTS[dialect]
     toks = _tokens_lower(d, t)
     nw = f"greatest({d.size(toks)}, 1)"
@@ -78,4 +81,7 @@ def quality_score_sql(dialect: str, t: str) -> str:
     len_term = f"least({d.size(toks)} * 1e0 / 50, 1e0)"
     div_term = f"({uniq} * 1e0 / {nw})"
     wl_term = f"least({mean_wl} / 10, 1e0)"
-    return f"round(0.3 * {len_term} + 0.4 * {div_term} + 0.3 * {wl_term}, 6)"
+    score = f"0.3 * {len_term} + 0.4 * {div_term} + 0.3 * {wl_term}"
+    if dialect == "spark":
+        return f"round(({score}) * 1000000, 0) / 1000000"
+    return f"round({score}, 6)"

@@ -236,15 +236,3 @@ def assemble_with_modalities(
 
 def _sql_lit(s: str) -> str:
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def assembled_text_sql(dialect: str) -> str:
-    """Scalar form used for oracle comparison: the ordered
-    'role: content' transcript of one conversation as a single string —
-    SQL-expressible in both engines (FIXTURES.md §4.2)."""
-    if dialect == "spark":
-        return (
-            "array_join(transform(array_sort(collect_list(struct(turn_idx, line))), "
-            "s -> s.line), char(10))"
-        )
-    return "string_agg(line, chr(10) ORDER BY turn_idx)"

@@ -28,22 +28,3 @@ def explode_sentences(
     return df.select(
         id_col, F.posexplode(sentences).alias("chunk_idx", "sentence")
     )
-
-
-def explode_chunks_by_spans(
-    df: DataFrame,
-    spans_col: str = "spans",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Generic span-list expansion (the literal TimestampChunkRowGenerator
-    shape): ``spans`` is array<struct<start:double,end:double>>; emits one
-    row per span with its index and duration."""
-    return df.select(
-        id_col, F.posexplode(spans_col).alias("chunk_idx", "span")
-    ).select(
-        id_col,
-        "chunk_idx",
-        F.col("span.start").alias("start"),
-        F.col("span.end").alias("end"),
-        F.round(F.col("span.end") - F.col("span.start"), 6).alias("duration"),
-    )

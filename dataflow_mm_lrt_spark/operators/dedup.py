@@ -260,7 +260,9 @@ def ngram_jaccard(
     # tokens of the candidate universe — candidate sets grow (df counts
     # merge, prefixes stay ≥ the bound), never shrink, so prefix-filter
     # completeness holds for the hash order like any other total order.
-    inv = base.select(id_col, F.explode("shingles").alias("_s")).select(
+    # Caveat: a collision between two shingles of ONE document shrinks
+    # that document's hashed prefix set (probability ≈2⁻⁶⁴ per pair).
+    inv =base.select(id_col, F.explode("shingles").alias("_s")).select(
         id_col, F.xxhash64("_s").alias("shingle")
     )
     shingle_df = inv.groupBy("shingle").agg(F.count("*").alias("df_cnt"))

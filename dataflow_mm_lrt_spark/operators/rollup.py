@@ -83,15 +83,6 @@ def hypertable_rollup(
     return out
 
 
-def kmv_sketch_expr(dialect: str, col: str, k: int) -> str:
-    """The KMV synopsis (k smallest 60-bit hashes of distinct values) as
-    a dual-dialect aggregate expression over a pre-grouped relation."""
-    h = md5_int_sql(dialect, col)
-    if dialect == "spark":
-        return f"slice(array_sort(collect_set({h})), 1, {k})"
-    return f"(list_sort(list_distinct(list({h}))))[1:{k}]"
-
-
 def kmv_distinct(
     df: DataFrame, col: str, k: int = 256, by: str | None = None,
     n_salts: int = 32,
@@ -102,8 +93,8 @@ def kmv_distinct(
     partial KMV (each task's collect_set holds only its salt's share of
     the distinct values), phase 2 unions the ≤ n_salts·k partial minima
     and re-truncates — exact, because every global k-minimum is one of
-    its salt's k minima. This is the salted-two-phase shape used for
-    skewed counts (streaming/skew.py), applied to a mergeable sketch.
+    its salt's k minima, so the salt spreads one group's distinct values
+    over n_salts tasks without changing the result.
     Output: (by?, n_hashes, kth_min, distinct_est).
     """
     h = md5_int_sql("spark", col)

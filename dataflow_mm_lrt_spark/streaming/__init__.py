@@ -3,8 +3,8 @@
 Stages (SURVEY.md §7.1): bounded/unbounded transcript source →
 stateless clean/filter (shared with the batch library) → watermark →
 stateful ordered assembly + in-conversation dedup
-(``applyInPandasWithState`` sorted-run state) → windowed aggregates
-(tumbling/sliding/session, salted two-phase for hot keys) →
-stream-stream join against tool-call events → exactly-once manifest
-sink with per-partition lineage + metrics.
+(``applyInPandasWithState`` sorted-run state, with the optional
+trailing-corpus near-dup gate) → windowed aggregates (tumbling/sliding/
+session) → stream-stream join against tool-call events → exactly-once
+manifest sink with per-partition lineage + metrics.
 """

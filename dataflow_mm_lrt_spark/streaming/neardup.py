@@ -1,88 +1,28 @@
-"""Streaming trailing-corpus near-dup — the reference's sequential
-corpus-gated dedup made streaming-native.
+"""The trailing-corpus near-dup kernel — the reference's sequential
+corpus-gated dedup (image_diversity_filter.py:15-34), one ordered chunk
+at a time.
 
-The reference TextDuplicateFilter / ImageDuplicateFilter
-(image_diversity_filter.py:15-34) compare each arriving row against a
-TRAILING corpus of previously-kept rows (capped at ``max_corpus`` =
-10 000) and append only kept rows. The batch operators in
-operators/dedup.py generalize that to order-deterministic all-pairs
-marking; THIS is the faithful sequential form, keyed for scale:
+The reference TextDuplicateFilter / ImageDuplicateFilter compare each
+arriving row against a TRAILING corpus of previously-kept rows (capped
+at ``max_corpus`` = 10 000) and append only kept rows. ``trailing_mark``
+is that scan over 64-bit SimHashes: a row whose min Hamming distance to
+the corpus is ≤ ``threshold`` is marked ``keep=false`` and NOT appended
+(the corpus only ever holds uniques); kept rows append and the oldest
+hashes fall off the window.
 
-* the 48-bit SimHash is computed upstream in Catalyst
-  (operators/dedup.with_simhash — identical hashing to the batch path,
-  zero per-row Python);
-* a keyed ``applyInPandasWithState`` holds, per key, a ring of the last
-  ``max_corpus`` KEPT simhashes (int64 ndarray — the state is a few KB,
-  never rows);
-* within a micro-batch rows are processed in (ts, turn_idx) order —
-  deterministic for a fixed input stream + watermark progression, the
-  same contract as ordered_assembly;
-* a row whose min Hamming distance to the corpus is ≤ ``threshold`` is
-  marked ``keep=false`` and NOT appended (the reference's corpus only
-  ever contains uniques); kept rows append, oldest hashes fall off the
-  ring;
-* idle keys evict ``state_ttl`` past their last event time
-  (EventTimeTimeout) — the corpus cap bounds state size, the TTL bounds
-  key count.
-
-Keying: default ``conv_id`` (dedup within a conversation, aligned with
-the pipeline's bucket(conv_id) layout — no extra shuffle). A constant
-key reproduces the reference's literal global sequential scan but
-serializes the stream through one task; documented, not default.
-
-Output marks rather than drops: (key, turn_idx, ts, simhash, keep,
-min_hamming) — min_hamming is −1 when the corpus was empty.
+This is the streaming pipeline's one near-dup kernel. It runs inside
+the assembly state (``stateful.make_assembly_func`` with
+``PipelineConfig.neardup_threshold``): the 48-bit SimHash is computed
+upstream in Catalyst (``operators.dedup.with_simhash``), each
+conversation's ring of kept hashes lives in its state, and ready turns
+are marked in emission order after the exact-fingerprint dedup.
 """
 
 from __future__ import annotations
 
-import pickle
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import (
-    BooleanType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-from ..operators.dedup import with_simhash
 
 MAX_CORPUS = 10_000  # the reference's max_corpus (image_diversity_filter.py:15)
-
-def neardup_schema(input_schema: StructType) -> StructType:
-    """Output = every input column (passthrough, so the stage can sit
-    mid-pipeline) + simhash/keep/min_hamming marks."""
-    fields = [f for f in input_schema.fields if f.name != "simhash"]
-    return StructType(
-        fields
-        + [
-            StructField("simhash", LongType()),
-            StructField("keep", BooleanType()),
-            StructField("min_hamming", IntegerType()),
-        ]
-    )
-
-
-def popcount64(x: np.ndarray) -> np.ndarray:
-    """Vectorized 64-bit popcount (SWAR; numpy<2 has no bitwise_count)."""
-    v = x.astype(np.uint64, copy=True)
-    m1 = np.uint64(0x5555555555555555)
-    m2 = np.uint64(0x3333333333333333)
-    m4 = np.uint64(0x0F0F0F0F0F0F0F0F)
-    h01 = np.uint64(0x0101010101010101)
-    v -= (v >> np.uint64(1)) & m1
-    v = (v & m2) + ((v >> np.uint64(2)) & m2)
-    v = (v + (v >> np.uint64(4))) & m4
-    return ((v * h01) >> np.uint64(56)).astype(np.int64)
 
 
 def _popcount64_min(v: np.ndarray, t: np.ndarray) -> int:
@@ -116,9 +56,10 @@ def trailing_mark(
     max_corpus: int = MAX_CORPUS,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Sequential trailing-corpus marking over one ordered chunk:
-    returns (keep, min_hamming, new_corpus). Shared by the streaming
-    state function and the test oracle's per-key replay — the state
-    MACHINERY is what the stream≡batch tests cross-check.
+    returns (keep, min_hamming, new_corpus). Called by the assembly
+    state function on every flush of ready turns; the micro-batch
+    oracle (oracle/pandas_pipeline.py) re-implements the scan from its
+    definition, and the ND pipeline parity test cross-checks the two.
 
     The corpus lives in a preallocated append-only buffer whose active
     window is the trailing ``max_corpus`` entries ending at the write
@@ -173,116 +114,3 @@ def trailing_mark(
         write += 1
     new_corpus = buf[max(0, write - max_corpus) : write].view(np.int64).copy()
     return keep, minh, new_corpus
-
-
-def _mark_chunk(
-    pdf: pd.DataFrame,
-    ring: np.ndarray,
-    threshold: int,
-    max_corpus: int,
-) -> tuple[pd.DataFrame, np.ndarray]:
-    """Order one chunk, mark it against the ring, return (marked pdf
-    with passthrough columns + marks, new ring)."""
-    pdf = pdf.sort_values(["ts", "turn_idx"], kind="mergesort").reset_index(
-        drop=True
-    )
-    hs = pdf["simhash"].to_numpy(dtype=np.int64)
-    keep, minh, ring = trailing_mark(hs, ring, threshold, max_corpus)
-    out = pdf.copy()
-    out["simhash"] = hs
-    out["keep"] = keep
-    out["min_hamming"] = minh.astype("int32")
-    return out, ring
-
-
-def make_neardup_func(
-    threshold: int, max_corpus: int, state_ttl_ms: int
-):
-    def mark(
-        key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            ring_b, last_ts_ms = state.get
-            ring = pickle.loads(ring_b)
-        else:
-            ring, last_ts_ms = np.empty(0, dtype=np.int64), 0
-
-        # Arrow delivers one key's micro-batch rows as MULTIPLE chunk
-        # DataFrames (split at arrow.maxRecordsPerBatch) in arbitrary
-        # intra-group order — the documented (ts, turn_idx) ordering
-        # only holds if we accumulate ALL chunks and sort ONCE before a
-        # single marking pass (per-chunk sorting would break stream≡
-        # batch parity for any key with >~10k rows in one micro-batch).
-        chunks = [] if state.hasTimedOut else [
-            pdf for pdf in pdf_iter if len(pdf) > 0
-        ]
-        out = None
-        if chunks:
-            whole = (
-                chunks[0]
-                if len(chunks) == 1
-                else pd.concat(chunks, ignore_index=True)
-            )
-            out, ring = _mark_chunk(whole, ring, threshold, max_corpus)
-            last_ts_ms = max(
-                last_ts_ms,
-                int(
-                    out["ts"].to_numpy(dtype="datetime64[ns]").astype("int64").max()
-                    // 1_000_000
-                ),
-            )
-
-        wm = state.getCurrentWatermarkMs()
-        if state.hasTimedOut and wm >= last_ts_ms + state_ttl_ms:
-            state.remove()
-        else:
-            state.update((pickle.dumps(ring), last_ts_ms))
-            state.setTimeoutTimestamp(max(last_ts_ms + state_ttl_ms, wm + 1))
-
-        if out is not None:
-            yield out
-
-    return mark
-
-
-def stream_simhash_dedup(
-    df: DataFrame,
-    key_col: str = "conv_id",
-    text_col: str = "text",
-    bits: int = 48,
-    threshold: int = 3,
-    max_corpus: int = MAX_CORPUS,
-    watermark_delay: str = "10 minutes",
-    state_ttl_ms: int = 30 * 60 * 1000,
-) -> DataFrame:
-    """Trailing-corpus SimHash near-dup over a (streaming or batch)
-    transcript frame with (key_col, turn_idx, ts, text). See module
-    docstring for semantics; batch frames run the identical group
-    function via applyInPandas-like batch groupBy (stream≡batch parity
-    is the test contract)."""
-    hashed = with_simhash(df, text_col=text_col, bits=bits)
-    if key_col != "conv_id":
-        hashed = hashed.withColumnRenamed(key_col, "conv_id")
-    schema = neardup_schema(hashed.schema)
-    fn = make_neardup_func(threshold, max_corpus, state_ttl_ms)
-    if df.isStreaming:
-        return (
-            hashed.withWatermark("ts", watermark_delay)
-            .groupBy("conv_id")
-            .applyInPandasWithState(
-                fn,
-                outputStructType=schema,
-                stateStructType="ring binary, last_ts_ms long",
-                outputMode="append",
-                timeoutConf=GroupStateTimeout.EventTimeTimeout,
-            )
-        )
-
-    # batch twin: one ordered pass per key through the same chunk kernel
-    def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        out, _ = _mark_chunk(
-            pdf, np.empty(0, dtype=np.int64), threshold, max_corpus
-        )
-        return out
-
-    return hashed.groupBy("conv_id").applyInPandas(run_batch, schema=schema)

@@ -82,8 +82,6 @@ STATE_SCHEMA = StructType(
     ]
 )
 
-_BUF_COLS = ["turn_idx", "ts_us", "role", "text", "tool", "fp"]
-
 DEFAULT_ORDER_SLACK_MS = 120_000
 DEFAULT_STATE_TTL_MS = 6 * 3600 * 1000
 
@@ -97,31 +95,15 @@ DEFAULT_STATE_TTL_MS = 6 * 3600 * 1000
 MAX_SEEN_FPS = 10_000
 
 
-def _empty_buf(with_simhash: bool = False) -> pd.DataFrame:
-    cols = {
-        "turn_idx": pd.Series(dtype="int64"),
-        "ts_us": pd.Series(dtype="int64"),
-        "role": pd.Series(dtype=object),
-        "text": pd.Series(dtype=object),
-        "tool": pd.Series(dtype=object),
-        "fp": pd.Series(dtype=object),
-    }
-    if with_simhash:
-        cols["simhash"] = pd.Series(dtype="int64")
-    return pd.DataFrame(cols)
-
-
 #: columnar buffer layout (r7): the buffered run is pickled as a plain
 #: tuple of numpy arrays — (turn_idx i8, ts_us i8, role, text, tool, fp
 #: object[, simhash i8]) — instead of a pandas DataFrame. A DataFrame
 #: pickle carries index/block-manager overhead (~7.9 KB per buffered row
 #: measured in BENCH_r06) and its construction/concat dominated the
-#: per-group Python cost; bare ndarrays pickle as buffers. Old-format
-#: states (DataFrame pickles) are still readable for checkpoint
-#: continuity.
+#: per-group Python cost; bare ndarrays pickle as buffers. A state in
+#: any other layout (DataFrame buffer, dict/set ``seen``) is refused.
 _N_BUF_ARRS = 6
 
-_HEX = frozenset("0123456789abcdef")
 _HEX_DEL = str.maketrans("", "", "0123456789abcdef")
 
 
@@ -131,29 +113,13 @@ def _fp_key(f):
     other string stays itself. Injective: digests (bytes) and raw
     strings (str) can never collide, and lowercase-hex → digest is a
     bijection, so membership semantics are exactly the fp-string
-    semantics. The lowercase-hex test is a C-speed ``str.translate``
-    deletion (empty ⟺ every char in 0-9a-f — the same predicate as the
-    old per-call ``set(f) - _HEX``, which cost 6× the conversion; this
-    runs once per fresh-buffered row)."""
+    semantics. Only called on the upstream ``fp`` column, i.e. on
+    Catalyst ``md5()`` strings. The lowercase-hex test is a C-speed
+    ``str.translate`` deletion (empty ⟺ every char in 0-9a-f); it runs
+    once per fresh-buffered row."""
     if len(f) == 32 and not f.translate(_HEX_DEL):
         return bytes.fromhex(f)
     return f
-
-
-def _cols_from_state(obj, nd: bool):
-    """State payload → tuple of column arrays (legacy DataFrame pickles
-    converted on read)."""
-    if isinstance(obj, tuple):
-        return obj
-    cols = [obj[c].to_numpy() for c in _BUF_COLS]
-    # legacy buffers carry hex-string fps; the columnar layout buffers
-    # compact keys (_fp_key) so re-key on conversion
-    fps = np.empty(len(cols[5]), dtype=object)
-    fps[:] = [_fp_key(f) for f in cols[5]]
-    cols[5] = fps
-    if nd:
-        cols.append(obj["simhash"].to_numpy(dtype=np.int64))
-    return tuple(cols)
 
 
 def make_assembly_func(
@@ -178,21 +144,19 @@ def make_assembly_func(
                 ring = pickle.loads(ring_b)
             else:
                 buf_b, seen_b, emit_seq, last_ts_ms = state.get
-            cols = _cols_from_state(pickle.loads(buf_b), nd)
-            loaded = pickle.loads(seen_b)
-            # r7 layout: an emission-ordered LIST of compact keys —
-            # lowercase-32-hex fps (the Catalyst md5 form) stored as
-            # their 16-byte digests, anything else as the raw string. A
-            # dict of hex strings pickled at ~57 B/entry and dominated
-            # state_bytes_peak (BENCH_r06); the digest list is ~20 B.
-            # Legacy layouts (hex-key dict; pre-cap set) convert on read;
-            # hex order equals digest-byte order so ordering is stable.
-            if isinstance(loaded, list):
-                seen_list = loaded
-            elif isinstance(loaded, dict):
-                seen_list = [_fp_key(k) for k in loaded]
-            else:
-                seen_list = [_fp_key(k) for k in sorted(loaded)]
+            cols = pickle.loads(buf_b)
+            # seen: an emission-ordered LIST of compact keys (_fp_key) —
+            # a dict of hex strings pickled at ~57 B/entry and dominated
+            # state_bytes_peak (BENCH_r06); the digest list is ~20 B
+            seen_list = pickle.loads(seen_b)
+            if not (isinstance(cols, tuple) and isinstance(seen_list, list)):
+                raise ValueError(
+                    f"state of conv_id={conv_id!r} holds a "
+                    f"{type(cols).__name__} buffer and a "
+                    f"{type(seen_list).__name__} seen set: the checkpoint "
+                    "predates the columnar state layout (tuple of arrays + "
+                    "list of keys); start from a fresh checkpoint"
+                )
             seen = set(seen_list)
         else:
             cols = tuple(

@@ -300,3 +300,18 @@ def test_crc16_gather_matches_byte_loop():
     for n in [0, 1, 31, 32, 33, 100, 1500, 1500, 7000, 300]:
         data = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
         assert flac.crc16(data) == ref(data), n
+
+
+def test_crc16_table_capped_on_long_messages():
+    """Messages longer than the distance table's cap fold in capped
+    chunks: the CRC still equals the bit-serial reference (including a
+    short tail below the 32-byte gather gate), and the module-global
+    table stops growing at the cap instead of at the longest message."""
+    from dataflow_mm_lrt_spark.functions import flac
+
+    cap = flac._CRC16_DIST_MAX
+    rng = np.random.default_rng(23)
+    for n in [cap, cap + 1, cap + 31, 2 * cap + 500, 3 * cap + 7]:
+        data = rng.integers(0, 256, n, dtype=np.uint8).tobytes()
+        assert flac.crc16(data) == crc16_ref(data), n
+    assert len(flac._CRC16_DIST) == cap

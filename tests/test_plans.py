@@ -4,7 +4,7 @@
 * no row-at-a-time PythonUDF in Catalyst hot paths (only Arrow nodes
   where a stage is documented as pandas-based);
 * broadcast joins where a small dimension is joined;
-* bucketed (conv_id-aligned) self-joins run without a shuffle exchange.
+* bucketed (conv_id-aligned) joins run without a shuffle exchange.
 """
 
 from __future__ import annotations
@@ -48,6 +48,22 @@ def test_rule_filter_pushes_predicates_and_prunes(spark):
     assert "InMemoryTableScan" in plan
     assert "EndsWith" in plan
     # only the two needed columns are read
+    assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
+
+
+def test_rule_filter_on_wide_scan_pushes_filters_without_barrier(spark, tmp_path):
+    """The no-op branch of the spread gate: with at least
+    defaultParallelism input files the scan already runs at cluster
+    width, so _par_scan adds no persist barrier and the rule predicates
+    reach the parquet scan as PushedFilters."""
+    p = spark.sparkContext.defaultParallelism
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs.repartition(p).write.parquet(str(tmp_path / "documents.parquet"))
+    assert len(spark.read.parquet(str(tmp_path / "documents.parquet")).inputFiles()) >= p
+    plan = _plan(QUERIES["rule_filter"](spark, str(tmp_path)))
+    assert "InMemoryTableScan" not in plan
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert any("Not(StringEndsWith(text" in ln for ln in pushed), pushed
     assert "ReadSchema: struct<doc_id:bigint,text:string>" in plan
 
 

@@ -7,13 +7,16 @@ eviction. A conversation longer than the cap keeps state bounded; a
 duplicate of an *evicted* fingerprint re-emits (forgetting semantics),
 a duplicate of a *recent* one is still dropped. Driven directly through
 ``make_assembly_func`` with a fake GroupState — no Spark session needed.
+A state written in a layout older than the columnar one is refused.
 """
 
 from __future__ import annotations
 
 import pickle
 
+import numpy as np
 import pandas as pd
+import pytest
 
 from dataflow_mm_lrt_spark.streaming.stateful import (
     MAX_SEEN_FPS,
@@ -111,3 +114,25 @@ def test_emission_deterministic_across_replays():
 
 def test_default_cap_is_reference_analogue():
     assert MAX_SEEN_FPS == 10_000
+
+
+def test_legacy_state_layout_raises():
+    """Only the columnar layout (tuple of arrays + list of keys) is read;
+    a DataFrame buffer or a dict/set ``seen`` raises one ValueError."""
+    fn = make_assembly_func(order_slack_ms=0, state_ttl_ms=10**12)
+    cols = tuple(
+        np.empty(0, dtype=np.int64) if i < 2 else np.empty(0, dtype=object)
+        for i in range(6)
+    )
+    fp = "0123456789abcdef" * 2
+    frame = pd.DataFrame({"turn_idx": [0], "ts_us": [0], "fp": [fp]})
+
+    def run(buf, seen):
+        st = FakeState()
+        st.update((pickle.dumps(buf), pickle.dumps(seen), 0, 0))
+        return list(fn(("convA",), iter([]), st))
+
+    assert run(cols, [bytes.fromhex(fp)]) == []  # current layout reads
+    for buf, seen in [(frame, []), (cols, {fp: None}), (cols, {fp})]:
+        with pytest.raises(ValueError, match="predates the columnar state"):
+            run(buf, seen)

@@ -1,13 +1,14 @@
-"""Streaming trailing-corpus SimHash near-dup (streaming/neardup.py) —
-the reference's sequential corpus-gated semantics
-(image_diversity_filter.py:15-34), keyed and bounded.
+"""Trailing-corpus SimHash near-dup — the reference's sequential
+corpus-gated semantics (image_diversity_filter.py:15-34), keyed and
+bounded, as the pipeline runs it: ``neardup.trailing_mark`` inside the
+assembly state (``PipelineConfig.neardup_threshold``).
 
-Cross-checks: the SWAR popcount against an int-level oracle; the
-trailing-mark kernel against a from-definition python replay; the
-streaming path (multi-micro-batch, stateful) against the batch twin on
-the same input — the state save/restore across micro-batches is exactly
-what the parity test exercises; and the max_corpus bound re-admits a
-duplicate after its hash fell off the ring."""
+Cross-checks: the trailing-mark kernel against a from-definition python
+replay (both of its paths); the max_corpus bound re-admits a duplicate
+after its hash fell off the ring; the full ND pipeline against the
+pandas micro-batch oracle row-for-row (state carried across
+micro-batches, and one conversation delivered as many Arrow chunks in
+scrambled order); and a checkpoint restart."""
 
 from __future__ import annotations
 
@@ -20,16 +21,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from dataflow_mm_lrt_spark.streaming import neardup
-
-
-def test_popcount64_matches_python():
-    rng = np.random.default_rng(5)
-    xs = rng.integers(-(2**63), 2**63 - 1, size=200, dtype=np.int64)
-    got = neardup.popcount64(xs)
-    want = [bin(int(x) & ((1 << 64) - 1)).count("1") for x in xs]
-    assert got.tolist() == want
-    assert neardup.popcount64(np.array([-1], dtype=np.int64)).tolist() == [64]
-    assert neardup.popcount64(np.array([0], dtype=np.int64)).tolist() == [0]
 
 
 def _replay(hashes, threshold, max_corpus):
@@ -112,60 +103,6 @@ def _transcripts(n_convs=12, turns=20, dup_frac=0.4, seed=3):
     df["tool"] = df["tool"].astype(object)
     df["ts"] = df["ts"].astype("datetime64[us]")  # Spark timestamp = micros
     return df
-
-
-def test_stream_matches_batch_twin(spark, tmp_path):
-    tr = _transcripts()
-    src_dir = tmp_path / "in"
-    os.makedirs(src_dir)
-    t = pa.Table.from_pandas(tr, preserve_index=False)
-    # 3 files → 3 micro-batches with maxFilesPerTrigger=1: state must
-    # carry the ring across batches for parity to hold
-    chunk = (len(tr) + 2) // 3
-    for i in range(0, len(tr), chunk):
-        fp = str(src_dir / f"part-{i//chunk:05d}.parquet")
-        pq.write_table(t.slice(i, chunk), fp)
-        os.utime(fp, (1_700_000_000 + i // chunk,) * 2)
-
-    batch_df = spark.createDataFrame(tr)
-    want = (
-        neardup.stream_simhash_dedup(batch_df, threshold=3)
-        .toPandas()
-        .set_index(["conv_id", "turn_idx"])
-        .sort_index()
-    )
-
-    from dataflow_mm_lrt_spark.streaming.source import TRANSCRIPT_SCHEMA
-
-    src = (
-        spark.readStream.schema(TRANSCRIPT_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src_dir))
-    )
-    out = neardup.stream_simhash_dedup(src, threshold=3, watermark_delay="72 hours")
-    q = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(tmp_path / "out"))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    got = (
-        spark.read.parquet(str(tmp_path / "out"))
-        .toPandas()
-        .set_index(["conv_id", "turn_idx"])
-        .sort_index()
-    )
-    # NOTE: files arrive in row order here (ts-ordered within each conv),
-    # so arrival order == event order and stream must equal batch exactly
-    assert len(got) == len(want) == len(tr)
-    assert got["keep"].tolist() == want["keep"].tolist()
-    assert got["simhash"].tolist() == want["simhash"].tolist()
-    assert got["min_hamming"].tolist() == want["min_hamming"].tolist()
-    # sanity: the dup injection actually produced suppressions
-    assert (~got["keep"]).sum() > 0
 
 
 def test_pipeline_with_neardup_stage(spark, tmp_path):
@@ -294,22 +231,19 @@ def test_simhash_python_twin_matches_catalyst(spark):
         assert got[i] == _simhash_py(t), t
 
 
-def test_nd_pipeline_matches_microbatch_oracle(spark, tmp_path):
-    """Strict engine≡oracle parity for the near-dup pipeline: the
-    pandas micro-batch simulator extended with the same ring gate must
-    reproduce the streaming emissions row-for-row (same files, same
-    watermark progression)."""
+def _assert_nd_matches_oracle(spark, work, tr, n_files):
+    """Drain ``tr`` (split into ``n_files`` files plus a punctuation
+    file, one file per micro-batch) through the ND pipeline and assert
+    its emissions equal microbatch_reference's row-for-row."""
     from dataflow_mm_lrt_spark.datagen import append_punctuation_file
     from dataflow_mm_lrt_spark.oracle.pandas_pipeline import microbatch_reference
     from dataflow_mm_lrt_spark.streaming.run import PipelineConfig, run_pipeline
 
-    tr = _transcripts(n_convs=10, turns=25, dup_frac=0.5, seed=29)
-    tr["role"] = np.where(np.arange(len(tr)) % 2 == 0, "human", "assistant")
-    src_dir = tmp_path / "in"
+    src_dir = work / "in"
     os.makedirs(src_dir)
     t = pa.Table.from_pandas(tr, preserve_index=False)
     file_pdfs = []
-    chunk = (len(tr) + 3) // 4
+    chunk = (len(tr) + n_files - 1) // n_files
     for i in range(0, len(tr), chunk):
         fp = str(src_dir / f"part-{i//chunk:05d}.parquet")
         pq.write_table(t.slice(i, chunk), fp)
@@ -335,7 +269,7 @@ def test_nd_pipeline_matches_microbatch_oracle(spark, tmp_path):
         max_files_per_trigger=1,
         neardup_threshold=3,
     )
-    sink, _ = run_pipeline(spark, str(src_dir), str(tmp_path / "out"), cfg)
+    sink, _ = run_pipeline(spark, str(src_dir), str(work / "out"), cfg)
     got = sink.read_committed(spark).toPandas()
     got = got[got.conv_id != "__punctuation__"]
     got = got.sort_values(["conv_id", "emit_seq"]).reset_index(drop=True)
@@ -360,63 +294,31 @@ def test_nd_pipeline_matches_microbatch_oracle(spark, tmp_path):
     assert len(exp) < len(exp_exact[exp_exact.conv_id != "__punctuation__"])
 
 
-def test_stream_parity_with_multi_chunk_micro_batch(spark, tmp_path):
-    """Regression for the per-chunk sort bug (ADVICE r5, medium):
-    applyInPandasWithState delivers one key's micro-batch rows as
-    MULTIPLE Arrow chunks (split at arrow.maxRecordsPerBatch) in
-    arbitrary intra-group order. The state function must accumulate all
-    chunks and sort ONCE — per-chunk sorting breaks the (ts, turn_idx)
-    ordering contract and stream/batch parity for any key with more
-    rows than one Arrow chunk in a single micro-batch. Forced here with
-    maxRecordsPerBatch=97 and one 600-row conversation arriving in one
-    micro-batch in SCRAMBLED row order."""
-    tr = _transcripts(n_convs=2, turns=300, dup_frac=0.5, seed=11)
-    # scrambled arrival: per-chunk sorted-order != globally sorted order
-    tr = tr.sample(frac=1.0, random_state=13).reset_index(drop=True)
+def test_nd_pipeline_matches_microbatch_oracle(spark, tmp_path):
+    """Strict engine≡oracle parity for the near-dup pipeline: the
+    pandas micro-batch simulator extended with the same ring gate must
+    reproduce the streaming emissions row-for-row (same files, same
+    watermark progression), on two inputs:
 
-    src_dir = tmp_path / "in"
-    os.makedirs(src_dir)
-    fp = str(src_dir / "part-00000.parquet")
-    pq.write_table(pa.Table.from_pandas(tr, preserve_index=False), fp)
+    * ten conversations over four files — the ring and the seen set
+      carry across micro-batches;
+    * one 600-row conversation in one file, in scrambled row order,
+      under arrow.maxRecordsPerBatch=97 — the state function receives
+      the conversation as several Arrow chunks in arbitrary order and
+      must buffer all of them before its single (turn_idx, ts) sort."""
+    tr = _transcripts(n_convs=10, turns=25, dup_frac=0.5, seed=29)
+    tr["role"] = np.where(np.arange(len(tr)) % 2 == 0, "human", "assistant")
+    _assert_nd_matches_oracle(spark, tmp_path / "multi_batch", tr, n_files=4)
 
-    want = (
-        neardup.stream_simhash_dedup(spark.createDataFrame(tr), threshold=3)
-        .toPandas()
-        .set_index(["conv_id", "turn_idx"])
-        .sort_index()
-    )
-
-    from dataflow_mm_lrt_spark.streaming.source import TRANSCRIPT_SCHEMA
-
+    one = _transcripts(n_convs=1, turns=600, dup_frac=0.5, seed=11)
+    one["role"] = np.where(np.arange(len(one)) % 2 == 0, "human", "assistant")
+    one = one.sample(frac=1.0, random_state=13).reset_index(drop=True)
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "97")
     try:
-        src = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(str(src_dir))
-        out = neardup.stream_simhash_dedup(
-            src, threshold=3, watermark_delay="72 hours"
-        )
-        q = (
-            out.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", str(tmp_path / "out"))
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        _assert_nd_matches_oracle(spark, tmp_path / "multi_chunk", one, n_files=1)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-    got = (
-        spark.read.parquet(str(tmp_path / "out"))
-        .toPandas()
-        .set_index(["conv_id", "turn_idx"])
-        .sort_index()
-    )
-    assert len(got) == len(want) == len(tr)
-    assert got["keep"].tolist() == want["keep"].tolist()
-    assert got["min_hamming"].tolist() == want["min_hamming"].tolist()
-    assert (~got["keep"]).sum() > 0  # dup injection really suppressed rows
 
 
 def test_trailing_mark_small_and_large_paths_agree():

@@ -1,6 +1,7 @@
-"""Stream-stream join (turns ⋈ tool events) and salted two-phase
-windowed aggregation: streaming output must equal the batch plan on the
-same input (Catalyst batch join/agg is the trusted oracle here)."""
+"""Stream-stream join (turns ⋈ tool events), streaming session windows
+and the streaming AS-OF join: streaming output must equal the batch
+plan on the same input (Catalyst batch join/agg is the trusted oracle
+here)."""
 
 from __future__ import annotations
 
@@ -19,7 +20,6 @@ from dataflow_mm_lrt_spark.datagen import (
     generate_transcripts,
 )
 from dataflow_mm_lrt_spark.streaming.join import turns_with_tool_events
-from dataflow_mm_lrt_spark.streaming.skew import salted_turn_counts
 from dataflow_mm_lrt_spark.streaming.source import (
     TOOL_EVENT_SCHEMA,
     TRANSCRIPT_SCHEMA,
@@ -137,36 +137,6 @@ def test_streaming_session_windows_match_batch(spark, join_ds, tmp_path):
     g, e = canon(stream), canon(batch)
     assert len(g) == len(e), f"{len(g)} vs {len(e)}"
     for c in ["conv_id", "session_start", "n_turns", "turn_trail"]:
-        assert (g[c].to_numpy() == e[c].to_numpy()).all(), c
-
-
-def test_salted_counts_match_batch(spark, join_ds, tmp_path):
-    d = join_ds
-    bt = spark.read.schema(TRANSCRIPT_SCHEMA).parquet(str(d / "transcripts"))
-    batch = (
-        salted_turn_counts(bt, streaming=False)
-        .toPandas()
-    )
-    st = transcript_stream(spark, str(d / "transcripts"), max_files_per_trigger=2)
-    out = salted_turn_counts(st, watermark_delay="72 hours", streaming=True)
-    q = (
-        out.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", str(tmp_path / "cnt_out"))
-        .option("checkpointLocation", str(tmp_path / "cnt_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    stream = spark.read.parquet(str(tmp_path / "cnt_out")).toPandas()
-
-    def canon(pdf):
-        pdf = pdf[pdf.conv_id != "__punctuation__"]
-        return pdf.sort_values(["conv_id", "window_start"]).reset_index(drop=True)
-
-    g, e = canon(stream), canon(batch)
-    assert len(g) == len(e), f"{len(g)} vs {len(e)}"
-    for c in ["conv_id", "window_start", "n_turns"]:
         assert (g[c].to_numpy() == e[c].to_numpy()).all(), c
 
 
