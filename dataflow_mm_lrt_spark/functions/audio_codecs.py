@@ -19,10 +19,10 @@ for images. Everything below is implemented from the public specs:
   (predictor int16, step index uint8), then nibble pairs low-first,
   stereo interleaved in 4-byte (8-nibble) channel words.
 
-Encoders exist for all three so mediagen and the tests can produce
-real compressed WAVs without external data. Decode is vectorized
-(256-entry LUTs for G.711; ADPCM's inherently sequential predictor
-loop runs per block over numpy nibble arrays).
+This module decodes only. The encoders that build compressed test
+WAVs live with the tests (tests/media_fixtures.py). Decode is
+vectorized (256-entry LUTs for G.711; ADPCM's inherently sequential
+predictor loop runs per block over numpy nibble arrays).
 """
 
 from __future__ import annotations
@@ -34,10 +34,6 @@ import numpy as np
 # ---------------------------------------------------------------------------
 
 _MULAW_BIAS = 0x84  # 132
-_MULAW_CLIP = 32635
-# segment end thresholds for the biased magnitude (exp = #ends crossed)
-_MULAW_SEG_ENDS = np.array([0x100, 0x200, 0x400, 0x800, 0x1000, 0x2000, 0x4000],
-                           dtype=np.int64)
 
 
 def _mulaw_decode_table() -> np.ndarray:
@@ -58,23 +54,9 @@ def mulaw_decode(codes: np.ndarray) -> np.ndarray:
     return MULAW_DECODE[np.asarray(codes, dtype=np.uint8)]
 
 
-def mulaw_encode(samples: np.ndarray) -> np.ndarray:
-    """int16 linear → uint8 μ-law codes (Sun g711.c semantics)."""
-    x = np.asarray(samples, dtype=np.int64)
-    sign = np.where(x < 0, 0x80, 0)
-    mag = np.minimum(np.abs(x), _MULAW_CLIP) + _MULAW_BIAS
-    exp = np.searchsorted(_MULAW_SEG_ENDS, mag, side="right")
-    mant = (mag >> (exp + 3)) & 0x0F
-    return (~(sign | (exp << 4) | mant) & 0xFF).astype(np.uint8)
-
-
 # ---------------------------------------------------------------------------
 # G.711 A-law
 # ---------------------------------------------------------------------------
-
-# segment ends on the 13-bit magnitude (sample >> 3), Sun g711.c seg_aend
-_ALAW_SEG_ENDS = np.array([0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF],
-                          dtype=np.int64)
 
 
 def _alaw_decode_table() -> np.ndarray:
@@ -93,20 +75,6 @@ ALAW_DECODE = _alaw_decode_table()
 def alaw_decode(codes: np.ndarray) -> np.ndarray:
     """uint8 G.711 A-law codes → int16 linear (±32256 peak)."""
     return ALAW_DECODE[np.asarray(codes, dtype=np.uint8)]
-
-
-def alaw_encode(samples: np.ndarray) -> np.ndarray:
-    """int16 linear → uint8 A-law codes (Sun g711.c semantics)."""
-    x = np.asarray(samples, dtype=np.int64) >> 3  # 13-bit domain
-    mask = np.where(x >= 0, 0xD5, 0x55)
-    mag = np.where(x >= 0, x, -x - 1)
-    seg = np.searchsorted(_ALAW_SEG_ENDS, mag, side="left")
-    # seg == 8 means magnitude out of range → peak code
-    shift = np.where(seg < 2, 1, np.maximum(seg, 1))
-    aval = np.where(
-        seg >= 8, 0x7F, (np.minimum(seg, 7) << 4) | ((mag >> shift) & 0x0F)
-    )
-    return ((aval ^ mask) & 0xFF).astype(np.uint8)
 
 
 # ---------------------------------------------------------------------------
@@ -154,45 +122,6 @@ def ima_decode_nibbles(
     return out
 
 
-def ima_encode_samples(
-    samples: np.ndarray, predictor: int, index: int
-) -> tuple[np.ndarray, int, int]:
-    """Standard IMA encoder: returns (nibbles uint8, predictor', index')."""
-    nibbles = np.empty(len(samples), dtype=np.uint8)
-    pred = int(predictor)
-    idx = int(index)
-    step_t = IMA_STEP_TABLE
-    index_t = IMA_INDEX_TABLE
-    for i, s in enumerate(np.asarray(samples, dtype=np.int64)):
-        step = int(step_t[idx])
-        delta = int(s) - pred
-        n = 0
-        if delta < 0:
-            n = 8
-            delta = -delta
-        if delta >= step:
-            n |= 4
-            delta -= step
-        if delta >= step >> 1:
-            n |= 2
-            delta -= step >> 1
-        if delta >= step >> 2:
-            n |= 1
-        # reconstruct exactly as the decoder will
-        diff = step >> 3
-        if n & 1:
-            diff += step >> 2
-        if n & 2:
-            diff += step >> 1
-        if n & 4:
-            diff += step
-        pred = pred - diff if n & 8 else pred + diff
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + int(index_t[n])))
-        nibbles[i] = n
-    return nibbles, pred, idx
-
-
 def ima_adpcm_decode_block(block: bytes, channels: int) -> np.ndarray:
     """One WAV format-0x11 block → (n_samples, channels) int16.
 
@@ -229,41 +158,3 @@ def ima_adpcm_decode_block(block: bytes, channels: int) -> np.ndarray:
         decoded = ima_decode_nibbles(nibs, preds[ch], idxs[ch])
         out_cols.append(np.concatenate([[np.int16(preds[ch])], decoded]))
     return np.stack(out_cols, axis=1)
-
-
-def ima_adpcm_encode(
-    samples: np.ndarray, rate: int, samples_per_block: int = 505
-) -> tuple[bytes, int, int]:
-    """(n, ch) int16 → (raw format-0x11 data bytes, block_align,
-    samples_per_block). samples_per_block counts the header sample;
-    (samples_per_block - 1) must be a multiple of 8 so blocks pack
-    whole channel words."""
-    samples = np.asarray(samples, dtype=np.int16)
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, channels = samples.shape
-    if (samples_per_block - 1) % 8 != 0:
-        raise ValueError("samples_per_block - 1 must be divisible by 8")
-    block_align = 4 * channels + (samples_per_block - 1) // 2 * channels
-    blocks = []
-    idx = [0] * channels
-    for start in range(0, n, samples_per_block):
-        chunk = samples[start:start + samples_per_block]
-        if len(chunk) < samples_per_block:  # zero-pad the tail block
-            pad = np.zeros((samples_per_block - len(chunk), channels),
-                           dtype=np.int16)
-            chunk = np.vstack([chunk, pad])
-        headers = b""
-        ch_words = []
-        for ch in range(channels):
-            pred = int(chunk[0, ch])
-            headers += pred.to_bytes(2, "little", signed=True) + bytes(
-                [idx[ch], 0]
-            )
-            nibs, _, idx[ch] = ima_encode_samples(chunk[1:, ch], pred, idx[ch])
-            packed = (nibs[0::2] | (nibs[1::2] << 4)).astype(np.uint8)
-            ch_words.append(packed.reshape(-1, 4))
-        # interleave channel words: L0 R0 L1 R1 ...
-        inter = np.stack(ch_words, axis=1).reshape(-1)
-        blocks.append(headers + inter.tobytes())
-    return b"".join(blocks), block_align, samples_per_block

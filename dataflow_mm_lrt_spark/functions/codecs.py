@@ -17,6 +17,10 @@ Formats in this module:
 * "raw video" = concatenated P6 frames (an honest uncompressed
   container; ``iter_ppm_frames`` walks it sequentially)
 
+PCM16 WAV is the one format encoded here (``encode_wav``, for mediagen).
+The PPM and companded/ADPCM WAV encoders only build test inputs and
+live in tests/media_fixtures.py.
+
 Reference parity note: the reference decodes eagerly per row with PIL /
 decord pools (utils/utils.py:27 _load_image); here decoding happens
 inside Arrow batches in ``mapInPandas`` stages.
@@ -74,13 +78,6 @@ def decode_ppm(buf: bytes, pos: int = 0) -> tuple[np.ndarray, int]:
         raise ValueError("truncated PPM payload")
     img = np.frombuffer(buf[payload:end], dtype=np.uint8).reshape(h, w, 3)
     return img, end
-
-
-def encode_ppm(img: np.ndarray) -> bytes:
-    h, w = img.shape[:2]
-    return b"P6\n%d %d\n255\n" % (w, h) + np.ascontiguousarray(
-        img.astype(np.uint8)
-    ).tobytes()
 
 
 def iter_ppm_frames(buf: bytes) -> Iterator[np.ndarray]:
@@ -295,57 +292,6 @@ def encode_wav(samples: np.ndarray, rate: int) -> bytes:
         + b"fmt " + struct.pack("<I", len(fmt)) + fmt
         + b"data" + struct.pack("<I", len(data)) + data
     )
-
-
-def _wav_container(fmt: bytes, data: bytes, fact: int | None = None) -> bytes:
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    if fact is not None:
-        chunks += b"fact" + struct.pack("<II", 4, fact)
-    chunks += b"data" + struct.pack("<I", len(data)) + data
-    if len(data) & 1:
-        chunks += b"\x00"  # word alignment pad
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def encode_wav_g711(samples: np.ndarray, rate: int, law: str = "mulaw") -> bytes:
-    """int16 samples → G.711-companded WAV (format tag 7=μ-law, 6=A-law).
-    One byte per sample; the non-PCM fmt carries cbSize=0 and a fact
-    chunk, per the RIFF/WAVE registration."""
-    from . import audio_codecs as _ac
-
-    samples = np.asarray(samples, dtype=np.int16)
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    channels = samples.shape[1]
-    if law == "mulaw":
-        tag, codes = 7, _ac.mulaw_encode(samples.reshape(-1))
-    elif law == "alaw":
-        tag, codes = 6, _ac.alaw_encode(samples.reshape(-1))
-    else:
-        raise ValueError(f"unknown companding law {law!r}")
-    fmt = struct.pack("<HHIIHHH", tag, channels, rate, rate * channels,
-                      channels, 8, 0)
-    return _wav_container(fmt, codes.tobytes(), fact=samples.shape[0])
-
-
-def encode_wav_ima(
-    samples: np.ndarray, rate: int, samples_per_block: int = 505
-) -> bytes:
-    """int16 samples → IMA ADPCM WAV (format tag 0x11): ~4:1 compressed,
-    per-block per-channel predictor headers, fact chunk carrying the
-    true sample count so decode drops tail-block padding."""
-    from . import audio_codecs as _ac
-
-    samples = np.asarray(samples, dtype=np.int16)
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, channels = samples.shape
-    data, block_align, spb = _ac.ima_adpcm_encode(samples, rate,
-                                                  samples_per_block)
-    blocks_per_sec = (rate + spb - 1) // spb
-    fmt = struct.pack("<HHIIHHHH", 0x11, channels, rate,
-                      blocks_per_sec * block_align, block_align, 4, 2, spb)
-    return _wav_container(fmt, data, fact=n)
 
 
 # ---------------------------------------------------------------------------

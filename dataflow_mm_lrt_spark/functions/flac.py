@@ -232,20 +232,7 @@ class _BitWriter:
 # shared tables
 # ---------------------------------------------------------------------------
 
-_RATE_TABLE = {
-    1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000, 6: 22050,
-    7: 24000, 8: 32000, 9: 44100, 10: 48000, 11: 96000,
-}
 _BPS_TABLE = {1: 8, 2: 12, 4: 16, 5: 20, 6: 24, 7: 32}
-
-# fixed-predictor reconstruction coefficients by order
-_FIXED_COEF = {
-    0: [],
-    1: [1],
-    2: [2, -1],
-    3: [3, -3, 1],
-    4: [4, -6, 4, -1],
-}
 
 
 def _utf8_decode(r: _BitReader) -> int:

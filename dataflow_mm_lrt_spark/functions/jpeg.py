@@ -14,13 +14,14 @@ remains the upgrade path for those and for bulk-throughput decode
 enough for fixtures and spot-decodes, not for 100 TB of camera
 photos).
 
-The encoders (baseline ``encode_jpeg``; progressive
-``encode_jpeg_progressive`` with a configurable scan script;
-quality-scaled Annex-K quantization, optional 4:2:0 subsampling)
-build optimal per-image Huffman tables with the spec's
-reserved-all-ones rule instead of hardcoding the Annex-K defaults —
-every table the decoder needs is read from the stream itself, so
-codec correctness never depends on a transcribed constant table.
+The baseline encoder ``encode_jpeg`` (quality-scaled Annex-K
+quantization, optional 4:2:0 subsampling; mediagen's JPEG source) and
+the progressive test encoder in tests/media_fixtures.py, which shares
+its coefficient preparation, build optimal per-image Huffman tables
+with the spec's reserved-all-ones rule instead of hardcoding the
+Annex-K defaults — every table the decoder needs is read from the
+stream itself, so codec correctness never depends on a transcribed
+constant table.
 
 Validation (tests/test_jpeg.py) follows the repo's inverse-pair
 pattern: the DCT/IDCT matrices are checked against an independent
@@ -730,264 +731,5 @@ def encode_jpeg(
             writer.write(val, vlen)
     writer.pad_to_byte()
     out += writer.out
-    out += b"\xff\xd9"
-    return bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# progressive encoder (SOF2, spectral selection + successive approximation)
-# ---------------------------------------------------------------------------
-
-class _ScanEmitter:
-    """Two-pass entropy emitter for one progressive scan: record
-    symbol/raw-bit events, build the optimal Huffman table from the
-    symbol stats, then serialize. EOB runs and their buffered
-    correction bits are deferred exactly as T.81 G.1.2.2/G.1.2.3
-    prescribe (libjpeg's emit_eobrun discipline)."""
-
-    def __init__(self) -> None:
-        self.events: list[tuple[str, int, int]] = []  # (kind, a, b)
-        self.eobrun = 0
-        self.be: list[int] = []  # correction bits buffered with the EOB run
-
-    def sym(self, s: int) -> None:
-        self.events.append(("sym", s, 0))
-
-    def bits(self, val: int, n: int) -> None:
-        if n:
-            self.events.append(("bits", val, n))
-
-    def flush_eobrun(self) -> None:
-        if self.eobrun > 0:
-            n = self.eobrun.bit_length() - 1
-            self.sym(n << 4)
-            self.bits(self.eobrun - (1 << n), n)
-            self.eobrun = 0
-        for b in self.be:
-            self.bits(b, 1)
-        self.be = []
-
-    def bump_eobrun(self, block_bits: list[int]) -> None:
-        self.eobrun += 1
-        self.be.extend(block_bits)
-        if self.eobrun == 0x7FFF:
-            self.flush_eobrun()
-
-
-def _ac_reduced(zz: np.ndarray, k: int, al: int) -> int:
-    """AC point transform (T.81 G.1.2.2): sign-preserving magnitude
-    shift — NOT an arithmetic shift, which would floor negatives."""
-    v = int(zz[k])
-    return -((-v) >> al) if v < 0 else v >> al
-
-
-def _encode_ac_first_block(
-    em: _ScanEmitter, zz: np.ndarray, Ss: int, Se: int, Al: int
-) -> None:
-    vals = [_ac_reduced(zz, k, Al) for k in range(Ss, Se + 1)]
-    if not any(vals):
-        em.bump_eobrun([])
-        return
-    em.flush_eobrun()
-    r = 0
-    last = max(i for i, v in enumerate(vals) if v)
-    for i, v in enumerate(vals[: last + 1]):
-        if v == 0:
-            r += 1
-            continue
-        while r > 15:
-            em.sym(0xF0)
-            r -= 16
-        s = _category(v)
-        em.sym((r << 4) | s)
-        em.bits(v if v >= 0 else v + (1 << s) - 1, s)
-        r = 0
-    if last < len(vals) - 1:
-        em.bump_eobrun([])
-
-
-def _encode_ac_refine_block(
-    em: _ScanEmitter, zz: np.ndarray, Ss: int, Se: int, Al: int
-) -> None:
-    """T.81 G.1.2.3 (libjpeg encode_mcu_AC_refine): newly significant
-    coefficients emit (run, 1) + sign; history-nonzero coefficients
-    append correction bits after the next emitted symbol (or travel
-    with the EOB run)."""
-    band = list(range(Ss, Se + 1))
-    t = [abs(_ac_reduced(zz, k, Al)) for k in band]
-    eob = 0  # index past the last newly-significant coefficient
-    for i, v in enumerate(t):
-        if v == 1:
-            eob = i + 1
-    r = 0
-    br: list[int] = []
-    for i, k in enumerate(band):
-        if t[i] == 0:
-            r += 1
-            continue
-        while r > 15 and i < eob:
-            em.flush_eobrun()
-            em.sym(0xF0)
-            r -= 16
-            for b in br:
-                em.bits(b, 1)
-            br = []
-        if t[i] > 1:
-            br.append(t[i] & 1)
-            continue
-        em.flush_eobrun()
-        em.sym((r << 4) | 1)
-        em.bits(1 if int(zz[k]) > 0 else 0, 1)
-        for b in br:
-            em.bits(b, 1)
-        br = []
-        r = 0
-    if r > 0 or br:
-        em.bump_eobrun(br)
-
-
-def encode_jpeg_progressive(
-    img: np.ndarray,
-    quality: int = 90,
-    subsample: str = "444",
-    scans: list[tuple[tuple[int, ...], int, int, int, int]] | None = None,
-) -> bytes:
-    """Encode (H, W, 3) or (H, W) uint8 as progressive JPEG (SOF2).
-
-    ``scans`` is the scan script: (component indices, Ss, Se, Ah, Al)
-    per scan. The default script exercises every decoder path —
-    interleaved DC first with a successive-approximation bit held back,
-    split AC spectral bands, two AC refinement passes, and the final DC
-    refinement. The coefficients are identical to :func:`encode_jpeg`'s
-    at the same (quality, subsample), so a progressive decode must
-    equal the baseline decode bit-for-bit — the cross-check
-    tests/test_jpeg.py relies on."""
-    h, w, comp_coefs, samp, qsel, qts, mcux, mcuy = _prepare_coefficients(
-        img, quality, subsample
-    )
-    ncomp = len(comp_coefs)
-    if scans is None:
-        if ncomp == 1:
-            scans = [
-                ((0,), 0, 0, 0, 1),
-                ((0,), 1, 5, 0, 2),
-                ((0,), 6, 63, 0, 2),
-                ((0,), 1, 63, 2, 1),
-                ((0,), 1, 63, 1, 0),
-                ((0,), 0, 0, 1, 0),
-            ]
-        else:
-            scans = [
-                ((0, 1, 2), 0, 0, 0, 1),
-                ((0,), 1, 5, 0, 2),
-                ((1,), 1, 63, 0, 1),
-                ((2,), 1, 63, 0, 1),
-                ((0,), 6, 63, 0, 2),
-                ((0,), 1, 63, 2, 1),
-                ((0,), 1, 63, 1, 0),
-                ((1,), 1, 63, 1, 0),
-                ((2,), 1, 63, 1, 0),
-                ((0, 1, 2), 0, 0, 1, 0),
-            ]
-
-    out = bytearray(b"\xff\xd8")
-    for qi in sorted(set(qsel)):
-        zz = qts[qi][ZIGZAG].astype(np.uint8).tobytes()
-        out += b"\xff\xdb" + struct.pack(">HB", 67, qi) + zz
-    out += b"\xff\xc2" + struct.pack(">HBHHB", 8 + 3 * ncomp, 8, h, w, ncomp)
-    for ci in range(ncomp):
-        out += bytes([ci + 1, (samp[ci][0] << 4) | samp[ci][1], qsel[ci]])
-
-    hmax = max(s[0] for s in samp)
-    vmax = max(s[1] for s in samp)
-
-    for comp_ix, Ss, Se, Ah, Al in scans:
-        needs_huff = not (Ss == 0 and Ah > 0)  # DC refinement is raw bits
-        tsel = {ci: (0 if ci == 0 else 1) for ci in comp_ix}
-        # ONE global event stream per scan — events from different
-        # Huffman tables interleave in MCU order, so the symbol is
-        # tagged with its table id and serialization walks the stream
-        # once. freqs accumulate per table.
-        events: list[tuple[int, int, int]] = []  # (tid|-1 raw, a, b)
-        freqs: dict[int, dict[int, int]] = {t: {} for t in set(tsel.values())}
-
-        def sym(tid: int, s: int) -> None:
-            events.append((tid, s, -1))
-            freqs[tid][s] = freqs[tid].get(s, 0) + 1
-
-        def bits(val: int, n: int) -> None:
-            if n:
-                events.append((-1, val, n))
-
-        if Ss == 0:  # DC scan (interleaved over the MCU grid)
-            pred = {ci: 0 for ci in comp_ix}
-            for m in range(mcux * mcuy):
-                my, mx = divmod(m, mcux)
-                for ci in comp_ix:
-                    hi, vi = samp[ci]
-                    for v in range(vi):
-                        for hh in range(hi):
-                            dc = int(comp_coefs[ci][my * vi + v, mx * hi + hh][0])
-                            if Ah == 0:
-                                red = dc >> Al  # arithmetic: T.81 G.1.2.1
-                                diff = red - pred[ci]
-                                pred[ci] = red
-                                s = _category(diff)
-                                sym(tsel[ci], s)
-                                bits(
-                                    diff if diff >= 0 else diff + (1 << s) - 1, s
-                                )
-                            else:
-                                bits((dc >> Al) & 1, 1)
-        else:  # AC scan: single component, its own block raster
-            (ci,) = comp_ix
-            hi, vi = samp[ci]
-            bh, bw = _comp_block_grid(h, w, hi, vi, hmax, vmax)
-            em = _ScanEmitter()
-            for u in range(bh * bw):
-                by, bx = divmod(u, bw)
-                zz = comp_coefs[ci][by, bx]
-                if Ah == 0:
-                    _encode_ac_first_block(em, zz, Ss, Se, Al)
-                else:
-                    _encode_ac_refine_block(em, zz, Ss, Se, Al)
-            em.flush_eobrun()
-            tid = tsel[ci]
-            for kind, a, b in em.events:
-                if kind == "sym":
-                    sym(tid, a)
-                else:
-                    bits(a, b)
-
-        # DHT for this scan (skipped for raw-bit DC refinement), then
-        # SOS + one entropy stream in original event order
-        codes: dict[int, dict[int, tuple[int, int]]] = {}
-        if needs_huff:
-            tc = 0 if Ss == 0 else 1
-            for tid in sorted(freqs):
-                f = freqs[tid] or {0: 1}
-                tbits, huffval = optimal_table(f)
-                codes[tid] = build_codes(tbits, huffval)
-                out += b"\xff\xc4" + struct.pack(
-                    ">HB", 19 + len(huffval), (tc << 4) | tid
-                )
-                out += bytes(tbits) + bytes(huffval)
-        writer = _BitWriter()
-        for tid, a, b in events:
-            if tid >= 0:
-                code, length = codes[tid][a]
-                writer.write(code, length)
-            else:
-                writer.write(a, b)
-        writer.pad_to_byte()
-
-        out += b"\xff\xda" + struct.pack(">HB", 6 + 2 * len(comp_ix), len(comp_ix))
-        for ci in comp_ix:
-            t = tsel[ci] if needs_huff else 0
-            tc_dc = t if Ss == 0 else 0
-            tc_ac = t if Ss > 0 else 0
-            out += bytes([ci + 1, (tc_dc << 4) | tc_ac])
-        out += bytes([Ss, Se, (Ah << 4) | Al])
-        out += writer.out
     out += b"\xff\xd9"
     return bytes(out)

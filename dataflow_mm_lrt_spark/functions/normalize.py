@@ -1,9 +1,10 @@
 """Text normalization as declarative SQL (dual dialect).
 
 Mirrors ``normalize()`` (rule_base_filter.py:36-56) minus the NFD step
-(no SQL equivalent in DuckDB; the reference-port oracle covers NFD, and
-``tests/test_normalize.py`` proves the delta is empty on the fixture
-corpus since all fixtures are NFC-invariant ASCII).
+(no SQL equivalent in DuckDB). The reference-port oracle keeps NFD, and
+``test_normalize_sql_matches_reference_with_nfd`` in
+tests/test_text_rules.py shows the delta is empty on the fixture corpus:
+no fixture text changes under NFD.
 """
 
 from __future__ import annotations

@@ -55,7 +55,3 @@ def phash64(img: np.ndarray, hash_size: int = 8, highfreq_factor: int = 4) -> in
     bits = (low > np.median(low)).flatten()
     packed = np.packbits(bits).tobytes()
     return int.from_bytes(packed, "big", signed=True)
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")

@@ -7,7 +7,7 @@ DuckDB SQL for the oracle). The Spark side therefore runs entirely inside
 whole-stage codegen — no Python in the hot path at any scale.
 
 Each ``rule_*`` function returns a boolean *fail* expression (true → the
-row fails that rule). ``keep_expr`` is the conjunction the engine uses;
+row fails that rule). ``keep_sql`` is the conjunction the engine uses;
 a text is kept iff it is non-blank and no rule fires.
 
 Known deliberate deltas from the reference Python (documented + covered
@@ -346,10 +346,3 @@ def rule_flag_sql(dialect: str, rule: str, t: str) -> str:
     if rule == "blank":
         return rule_blank(d, t)
     return RULES[rule](d, t)
-
-
-def keep_expr(t: str = "text"):
-    """Spark Column for the full keep predicate (lazy import)."""
-    from pyspark.sql import functions as F
-
-    return F.expr(keep_sql("spark", t))

@@ -300,17 +300,6 @@ def _read_code_lengths(br: BitReader, alphabet_size: int) -> _Decoder:
 # ---------------------------------------------------------------------------
 
 
-def prefix_value(br: BitReader, code: int) -> int:
-    """Length/distance prefix decode (VP8L spec §4.2.2): codes 0..3 are
-    the literal values 1..4; above that each pair of codes doubles the
-    range with (code-2)>>1 extra bits."""
-    if code < 4:
-        return code + 1
-    extra = (code - 2) >> 1
-    offset = (2 + (code & 1)) << extra
-    return offset + br.bits(extra) + 1
-
-
 def prefix_encode(value: int) -> tuple[int, int, int]:
     """value -> (prefix_code, extra_bits_value, extra_bits_count)."""
     if value <= 4:

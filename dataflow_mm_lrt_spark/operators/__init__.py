@@ -5,64 +5,8 @@ The Spark-first re-expression of the reference's operator families
 DAGs — Catalyst owns pushdown/pruning/join planning; the reference's
 step-file materialization between operators has no analogue here.
 
-Registry: ``STAGES`` maps operator names to factories, replacing the
-reference's ``OPERATOR_REGISTRY`` decorator/lazy-import machinery
-(dataflow/utils/registry.py:208) with a plain dict.
+There is no registry: the reference's ``OPERATOR_REGISTRY``
+decorator/lazy-import machinery (dataflow/utils/registry.py:208) maps
+onto ``contract.QUERIES``, which names each operator's query, and
+callers import the stage modules directly.
 """
-
-from __future__ import annotations
-
-from . import (  # noqa: F401
-    assembly,
-    chunk,
-    dedup,
-    mcts,
-    multimodal,
-    ranking,
-    refine,
-    similarity,
-    text,
-    windows,
-)
-
-STAGES = {
-    # text cleaning / filtering (§2.2)
-    "normalize_text": text.normalize_text,
-    "rule_filter": text.rule_filter,
-    "role_tool_filter": text.role_tool_filter,
-    "strip_multimodal_tokens": text.strip_multimodal_tokens,
-    "text_stats": text.text_stats,
-    # dedup (§2.3)
-    "dedup_exact_keep_first": dedup.exact_keep_first,
-    "dedup_minhash_lsh": dedup.minhash_lsh,
-    "dedup_ngram_jaccard": dedup.ngram_jaccard,
-    "dedup_simhash": dedup.simhash_near_dup,
-    # score/predicate filters (§2.4)
-    "score_filter": ranking.score_filter,
-    "keep_ratio_top_fraction": ranking.keep_top_fraction,
-    "top_k": ranking.top_k,
-    # conversation assembly (§2.5)
-    "assemble_conversations": assembly.assemble_conversations,
-    # row expansion (§2.6)
-    "explode_sentences": chunk.explode_sentences,
-    # windows (§2.6 → streaming semantics)
-    "tumbling_counts": windows.tumbling_counts,
-    "sliding_counts": windows.sliding_counts,
-    "session_windows": windows.session_windows,
-    # windows / CEP (cont.)
-    "transcript_sessions": windows.transcript_sessions,
-    "cep_funnel": windows.cep_funnel,
-    # refiners / evaluators (§2.2, §2.7, §2.8)
-    "functional_refiner": refine.functional_refiner,
-    "prompt_template_fill": refine.prompt_template_fill,
-    "range_filter": refine.range_filter,
-    "answer_eval": refine.answer_eval,
-    "basic_normalize_text": refine.basic_normalize_text,
-    "mcts_tree_refiner": mcts.mcts_tree_refiner,
-    "wiki_qa_refiner": refine.wiki_qa_refiner,
-    # similarity search
-    "knn_brute_cosine": similarity.knn_brute_cosine,
-    "ann_ivf_cosine": similarity.ann_ivf_cosine,
-    # multimodal plumbing
-    "extract_media_features": multimodal.extract_features,
-}

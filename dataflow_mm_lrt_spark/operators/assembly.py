@@ -1,44 +1,22 @@
 """Conversation assembly (SURVEY.md §2.5) — the Conversation2Message
 semantics (conversation_to_message.py:49-104) as a distributed group-by.
 
-Two equivalent forms:
-
-* ``assemble_conversations`` — pure Catalyst: collect turn structs per
-  conversation, sort by (turn_idx, ts) inside the array (stable order
-  without a global sort), build the nested messages array with
-  higher-order functions. One shuffle on conv_id; partial aggregation
-  applies map-side; no Python.
-* ``assemble_conversations_pandas`` — the same semantics through
-  ``applyInPandas`` (Arrow-batched), kept as the template the streaming
-  stateful stage builds on, and as a second implementation the tests
-  diff against the Catalyst form.
+``assemble_conversations`` is pure Catalyst: collect turn structs per
+conversation, sort by (turn_idx, ts) inside the array (stable order
+without a global sort), build the nested messages array with
+higher-order functions. One shuffle on conv_id; partial aggregation
+applies map-side; no Python. tests/test_operators.py checks it against
+the reference port (``oracle.reference_port.conversation_to_messages``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from ..functions.normalize import strip_multimodal_tokens_sql
-from ..oracle.reference_port import conversation_to_messages
 
 SYSTEM_PROMPT = "You are a helpful agent."
-
-MESSAGES_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("role", StringType()),
-            StructField("content", StringType()),
-        ]
-    )
-)
 
 
 def assemble_conversations(
@@ -85,42 +63,6 @@ def assemble_conversations(
             ).alias("messages"),
         )
     )
-
-
-def assemble_conversations_pandas(
-    df: DataFrame,
-    conv_col: str = "conv_id",
-    system_prompt: str = SYSTEM_PROMPT,
-) -> DataFrame:
-    """Same semantics via Arrow-batched applyInPandas (grouped-map).
-
-    Reuses the reference-port function so tests can diff the Catalyst
-    implementation against the reference behavior directly.
-    """
-    out_schema = StructType(
-        [
-            StructField("conv_id", StringType()),
-            StructField("n_turns", StringType()),
-            StructField("messages_json", StringType()),
-        ]
-    )
-
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        import json
-
-        pdf = pdf[pdf["role"] != "system"].sort_values(["turn_idx", "ts"])
-        msgs = conversation_to_messages(
-            list(zip(pdf["role"], pdf["text"])), system_prompt
-        )
-        return pd.DataFrame(
-            {
-                "conv_id": [key[0]],
-                "n_turns": [str(len(pdf))],
-                "messages_json": [json.dumps(msgs)],
-            }
-        )
-
-    return df.groupBy(conv_col).applyInPandas(assemble, schema=out_schema)
 
 
 def assemble_with_modalities(

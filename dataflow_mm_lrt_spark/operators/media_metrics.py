@@ -1,41 +1,27 @@
-"""Per-media metric extraction + segmentation — the reference's
-video/audio metric-filter family, made real by the pure-numpy codecs.
+"""Per-media metric extraction — the reference's video/audio
+metric-filter family, made real by the pure-numpy codecs.
 
 The reference computes these with model/native stacks (decord, opencv,
 silero); SURVEY §2 scoped those out for lack of codecs. With
 functions/{png,gif,jpeg,codecs}.py decoding real containers, the
 classic non-model baselines become implementable end-to-end:
 
-- ``video_metrics``   — luminance + frame-difference motion, the
-  VideoLuminanceEvaluator (eval/video_luminance_*.py:395) and
-  VideoMotionScoreFilter (filter/video_motion_score_filter.py) column
-  contract with Rec.601 luma and global |Δframe| motion in place of
-  optical flow (disclosed analogue, not a port).
-- ``video_scene_rows`` — content-change temporal segmentation, 1→N
-  scene rows (VideoSceneFilter, video_scene_filter.py:515, run
-  557-606), with the same min/max-length constraints
-  (:40-41 min_seconds/max_seconds → min/max frames here).
 - ``image_metrics``   — brightness/contrast/colorfulness (Hasler &
   Süsstrunk 2003) /sharpness (Laplacian variance), the standard
   no-model image-quality columns the score/range filters consume.
 - ``audio_metrics``   — duration/RMS-dB/clipping/silence ratios.
-- ``audio_vad``       — energy VAD emitting the SileroVADGenerator
-  timestamps contract (`array<struct<start,end>>`,
-  audio_silero_vad_generator.py:29, run 262) from frame RMS
-  thresholding (model replaced by the classic energy baseline).
-- ``audio_chunk_rows`` — slices real WAV bytes by those timestamps,
-  1→N chunk rows (TimestampChunkRowGenerator,
-  audio_timestamp_chunk_row_generator.py:28, run 181-221) with the
-  max-duration split behavior.
+- ``video_info``      — the VideoInfoFilter metadata probe.
+- ``resolution_keep`` — the VideoResolutionFilter predicate.
 
-All are Arrow-batched ``mapInPandas`` stages over opaque binary
-columns: at scale the decode cost dominates and parallelism comes from
-input splits; ``_spread`` (dedup.py:31) widens narrow inputs to cluster
+Each backs a contract query. The three decoding stages are
+Arrow-batched ``mapInPandas`` stages over opaque binary columns: at
+scale the decode cost dominates and parallelism comes from input
+splits; ``_spread`` (dedup.py:31) widens narrow inputs to cluster
 parallelism first and is a guarded no-op at real scale (splits ≥
-cores), so no exchange is added where it wouldn't help. 1→N operators
-emit within the partition. Downstream filtering composes with the existing
-schema-tolerant ``range_filter`` (operators/refine.py:80) — that pair
-IS the VideoScoreFilter shape (video_score_filter.py:160).
+cores), so no exchange is added where it wouldn't help.
+Downstream filtering composes with the existing schema-tolerant
+``range_filter`` (operators/refine.py:80) — that pair IS the
+VideoScoreFilter shape (video_score_filter.py:160).
 """
 
 from __future__ import annotations
@@ -49,8 +35,6 @@ from pyspark.sql import DataFrame
 from .dedup import _spread
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
-    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -63,141 +47,6 @@ from pyspark.sql.types import (
 def _luma(frame: np.ndarray) -> np.ndarray:
     f = frame.astype(np.float64)
     return 0.299 * f[..., 0] + 0.587 * f[..., 1] + 0.114 * f[..., 2]
-
-
-VIDEO_METRICS_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("n_frames", IntegerType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("lum_mean", DoubleType()),
-        StructField("lum_min", DoubleType()),
-        StructField("lum_max", DoubleType()),
-        StructField("motion", DoubleType()),
-        StructField("static_ratio", DoubleType()),
-    ]
-)
-
-
-def video_metrics(df: DataFrame, static_eps: float = 1.0) -> DataFrame:
-    """Per-video luminance and motion columns. ``motion`` is the mean
-    over consecutive frame pairs of mean |Δluma| (global-motion
-    magnitude analogue of the optical-flow score); ``static_ratio`` is
-    the fraction of pairs below ``static_eps`` (static-clip detector).
-    Single-frame videos report motion 0 and static_ratio 1."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                frames = list(codecs.iter_video_frames(bytes(c or b"")))
-                if not frames:
-                    raise codecs.CodecUnavailable("empty video stream")
-                lumas = [_luma(f) for f in frames]
-                per_frame = [float(l.mean()) for l in lumas]
-                diffs = [
-                    float(np.abs(b - a).mean())
-                    for a, b in zip(lumas, lumas[1:])
-                ]
-                rows.append(
-                    (
-                        mid,
-                        len(frames),
-                        frames[0].shape[1],
-                        frames[0].shape[0],
-                        float(np.mean(per_frame)),
-                        float(np.min(per_frame)),
-                        float(np.max(per_frame)),
-                        float(np.mean(diffs)) if diffs else 0.0,
-                        float(np.mean([d < static_eps for d in diffs]))
-                        if diffs
-                        else 1.0,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_METRICS_SCHEMA])
-
-    return _spread(df).mapInPandas(run, schema=VIDEO_METRICS_SCHEMA)
-
-
-SCENE_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("scene_idx", IntegerType()),
-        StructField("start_frame", IntegerType()),
-        StructField("end_frame", IntegerType()),  # exclusive
-        StructField("n_frames", IntegerType()),
-    ]
-)
-
-
-def _scene_spans(
-    lumas: list[np.ndarray],
-    threshold: float,
-    min_frames: int,
-    max_frames: int | None,
-) -> list[tuple[int, int]]:
-    """Content-change segmentation spans over a luma sequence (shared by
-    video_scene_rows and video_clip_rows): cut where mean |Δluma| >
-    threshold, merge sub-min scenes into their predecessor (a short
-    FIRST scene merges forward), split over-max scenes at fixed
-    intervals."""
-    n = len(lumas)
-    cuts = [0] + [
-        i + 1
-        for i, (a, b) in enumerate(zip(lumas, lumas[1:]))
-        if float(np.abs(b - a).mean()) > threshold
-    ] + [n]
-    merged: list[list[int]] = []
-    for s, e in zip(cuts, cuts[1:]):
-        if merged and e - s < min_frames:
-            merged[-1][1] = e
-        else:
-            merged.append([s, e])
-    if len(merged) > 1 and merged[0][1] - merged[0][0] < min_frames:
-        merged[1][0] = merged[0][0]
-        merged.pop(0)
-    final: list[tuple[int, int]] = []
-    for s, e in merged:
-        if max_frames and e - s > max_frames:
-            final += [(x, min(x + max_frames, e)) for x in range(s, e, max_frames)]
-        else:
-            final.append((s, e))
-    return final
-
-
-def video_scene_rows(
-    df: DataFrame,
-    threshold: float = 30.0,
-    min_frames: int = 1,
-    max_frames: int | None = None,
-) -> DataFrame:
-    """1→N temporal segmentation: a new scene starts wherever mean
-    |Δluma| between consecutive frames exceeds ``threshold``
-    (content-change detection, video_scene_filter.py:557-606). Scenes
-    shorter than ``min_frames`` merge into their predecessor; scenes
-    longer than ``max_frames`` split at fixed intervals — the
-    reference's min_seconds/max_seconds constraints in frame units."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                lumas = [
-                    _luma(f) for f in codecs.iter_video_frames(bytes(c or b""))
-                ]
-                if not lumas:
-                    raise codecs.CodecUnavailable("empty video stream")
-                final = _scene_spans(lumas, threshold, min_frames, max_frames)
-                for i, (s, e) in enumerate(final):
-                    rows.append((mid, i, s, e, e - s))
-            yield pd.DataFrame(rows, columns=[f.name for f in SCENE_SCHEMA])
-
-    return _spread(df).mapInPandas(run, schema=SCENE_SCHEMA)
 
 
 IMAGE_METRICS_SCHEMA = StructType(
@@ -314,122 +163,6 @@ def audio_metrics(
             yield pd.DataFrame(rows, columns=[f.name for f in AUDIO_METRICS_SCHEMA])
 
     return _spread(df).mapInPandas(run, schema=AUDIO_METRICS_SCHEMA)
-
-
-VAD_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField(
-            "timestamps",
-            ArrayType(
-                StructType(
-                    [
-                        StructField("start", DoubleType()),
-                        StructField("end", DoubleType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
-def audio_vad(
-    df: DataFrame, frame_ms: int = 20, threshold_db: float = -40.0
-) -> DataFrame:
-    """Energy VAD: frames with RMS above ``threshold_db`` dBFS are
-    voice-active; consecutive active frames merge into one
-    ``{start, end}`` span (seconds). Output matches the reference
-    generator's `timestamps` column contract so the chunker consumes
-    it unchanged."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                samples, rate = codecs.decode_audio(bytes(c or b""))
-                mono = samples.astype(np.float64).mean(axis=1)
-                fdb = _frame_rms_db(mono, rate, frame_ms)
-                active = fdb >= threshold_db
-                spans = []
-                start = None
-                for i, a in enumerate(active):
-                    if a and start is None:
-                        start = i
-                    elif not a and start is not None:
-                        spans.append(
-                            {"start": start * frame_ms / 1000.0,
-                             "end": i * frame_ms / 1000.0}
-                        )
-                        start = None
-                if start is not None:
-                    spans.append(
-                        {"start": start * frame_ms / 1000.0,
-                         "end": len(active) * frame_ms / 1000.0}
-                    )
-                rows.append((mid, spans))
-            yield pd.DataFrame(rows, columns=["media_id", "timestamps"])
-
-    return _spread(df).mapInPandas(run, schema=VAD_SCHEMA)
-
-
-CHUNK_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("chunk_idx", IntegerType()),
-        StructField("start", DoubleType()),
-        StructField("end", DoubleType()),
-        StructField("content", BinaryType()),
-    ]
-)
-
-
-def audio_chunk_rows(
-    df: DataFrame,
-    max_duration_s: float | None = None,
-) -> DataFrame:
-    """1→N: slice each row's WAV bytes by its ``timestamps`` spans into
-    chunk rows of real WAV bytes. Spans longer than ``max_duration_s``
-    split at fixed intervals (the reference chunker's split mode,
-    audio_timestamp_chunk_row_generator.py:181-221). Cardinality grows
-    within the partition — no shuffle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import codecs
-
-        for pdf in batches:
-            rows = []
-            for mid, c, spans in zip(
-                pdf["media_id"], pdf["content"], pdf["timestamps"]
-            ):
-                samples, rate = codecs.decode_audio(bytes(c or b""))
-                pieces = []
-                for span in spans if spans is not None else []:
-                    s = float(span["start"]) if isinstance(span, dict) else float(span[0])
-                    e = float(span["end"]) if isinstance(span, dict) else float(span[1])
-                    if max_duration_s:
-                        x = s
-                        while x < e:
-                            pieces.append((x, min(x + max_duration_s, e)))
-                            x += max_duration_s
-                    else:
-                        pieces.append((s, e))
-                for i, (s, e) in enumerate(pieces):
-                    lo, hi = int(round(s * rate)), int(round(e * rate))
-                    rows.append(
-                        (
-                            mid,
-                            i,
-                            s,
-                            e,
-                            codecs.encode_wav(samples[lo:hi], rate),
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in CHUNK_SCHEMA])
-
-    return _spread(df).mapInPandas(run, schema=CHUNK_SCHEMA)
 
 
 VIDEO_INFO_SCHEMA = StructType(
@@ -560,81 +293,3 @@ def resolution_keep(
         quant(F.col(videos_col), pred),
     ).otherwise(F.lit(False))
     return df.withColumn(out_col, keep)
-
-
-CLIP_ROWS_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("scene_idx", IntegerType()),
-        StructField("start_frame", IntegerType()),
-        StructField("end_frame", IntegerType()),  # exclusive
-        StructField("n_frames", IntegerType()),
-        StructField("content", BinaryType()),
-        StructField("codec", StringType()),
-    ]
-)
-
-
-def video_clip_rows(
-    df: DataFrame,
-    threshold: float = 30.0,
-    min_frames: int = 1,
-    max_frames: int | None = None,
-) -> DataFrame:
-    """VideoSceneClipGenerator / VideoClipGenerator shape
-    (video_clip_generator.py:245-330: flatten scene list, CUT each
-    span's frames into a standalone clip file) over the real codecs:
-    scenes from the shared content-change segmentation, each span's
-    frames re-encoded as a standalone animated GIF (each span carries
-    its OWN per-frame delays from the source GIF, so variable-delay
-    timing survives the cut; >256-color spans fall back to a
-    concatenated-P6 stream, ``codec`` says which). 1→N rows emit within
-    the partition — no shuffle; clip bytes round-trip through
-    iter_video_frames, so downstream media operators consume clips
-    exactly like source videos. Undecodable or empty inputs emit ZERO
-    rows for that media_id (the reference's safe skip — a per-row
-    failure must never kill the task, matching video_info's error
-    path)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import codecs
-        from ..functions.gif import encode_gif, iter_gif_frames
-
-        for pdf in batches:
-            rows = []
-            for mid, c in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    buf = bytes(c or b"")
-                    if buf[:6] in (b"GIF87a", b"GIF89a"):
-                        pairs = list(iter_gif_frames(buf))
-                        frames = [f for f, _ in pairs]
-                        # 0-delay frames render at the de-facto minimum
-                        # of 1 cs, per frame
-                        delays = [max(d, 1) for _, d in pairs]
-                    else:
-                        frames = list(codecs.iter_video_frames(buf))
-                        delays = [4] * len(frames)
-                    if not frames:
-                        continue
-                    lumas = [_luma(f) for f in frames]
-                    spans = _scene_spans(
-                        lumas, threshold, min_frames, max_frames
-                    )
-                    for i, (s, e) in enumerate(spans):
-                        clip = frames[s:e]
-                        try:
-                            blob = encode_gif(clip, delay_cs=delays[s:e])
-                            codec = "gif"
-                        except ValueError:
-                            blob = b"".join(
-                                codecs.encode_ppm(f) for f in clip
-                            )
-                            codec = "ppm"
-                        rows.append(
-                            (mid, i, s, e, e - s, bytearray(blob), codec)
-                        )
-                except Exception:
-                    continue  # undecodable input: skip, never fail the task
-            yield pd.DataFrame(rows, columns=[f.name for f in CLIP_ROWS_SCHEMA])
-
-    return _spread(df).mapInPandas(run, schema=CLIP_ROWS_SCHEMA)

@@ -2,18 +2,16 @@
 
 The reference loads pixels/waveforms eagerly per row (utils/utils.py:27
 ``_load_image``; video ops decode in multiprocessing pools). Here media
-travel as ``binary`` columns with typed metadata, and decode /
-feature-extract / resize / frame-sample run as Arrow-batched
-``mapInPandas`` stages.
+travel as ``binary`` columns with typed metadata, and decode +
+feature-extract runs as one Arrow-batched ``mapInPandas`` stage,
+``extract_features``.
 
-As of round 3 the codec path is REAL for uncompressed formats
-(functions/codecs.py, pure numpy — no libraries needed): PPM/BMP
-images, PCM16 WAV audio, and concatenated-P6 raw video all decode,
-featurize, resize (bilinear) and frame-sample end-to-end. Compressed
-formats (JPEG/PNG/MP4) upgrade through a PIL import-try and raise
-``CodecUnavailable`` in this container. ``fake=True`` keeps the
-deterministic content-hash double used by the driver contract row
-(stable across rounds)."""
+The codec path is REAL (functions/codecs.py and its sibling decoders,
+pure numpy — no libraries needed): images, WAV audio and video
+containers decode and featurize end-to-end. ``fake=True`` keeps the
+deterministic content-hash double used by the ``multimodal_features``
+contract row (stable across rounds).
+"""
 
 from __future__ import annotations
 
@@ -23,10 +21,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     FloatType,
     IntegerType,
     StringType,
@@ -34,17 +30,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("kind", StringType()),        # image | audio | video
-        StructField("content", BinaryType()),
-        StructField("mime", StringType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("duration_ms", IntegerType()),
-    ]
-)
 
 FEATURE_SCHEMA = StructType(
     [
@@ -120,163 +105,3 @@ def extract_features(df: DataFrame, fake: bool = False) -> DataFrame:
             )
 
     return df.mapInPandas(run, schema=FEATURE_SCHEMA)
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("kind", StringType()),
-        StructField("content", BinaryType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-    ]
-)
-
-FRAME_SCHEMA = StructType(
-    [
-        StructField("media_id", StringType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("content", BinaryType()),
-    ]
-)
-
-
-def resize_media(
-    df: DataFrame, width: int = 224, height: int = 224, fake: bool = False
-) -> DataFrame:
-    """1→1 resize stage (mapInPandas). Real path: decode (PPM/BMP or
-    PIL upgrade) → vectorized bilinear resample → re-encode as P6.
-    ``fake=True`` keeps the digest-derived deterministic double."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..functions import codecs
-
-        for pdf in batches:
-            out = []
-            for c in pdf["content"]:
-                if fake:
-                    digest = hashlib.md5(c or b"").digest()
-                    reps = (width * height) // len(digest) + 1
-                    out.append((digest * reps)[: width * height])
-                else:
-                    img = codecs.decode_image(c or b"")
-                    out.append(
-                        codecs.encode_ppm(
-                            codecs.resize_bilinear(img, width, height)
-                        )
-                    )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "content": out,
-                    "width": width,
-                    "height": height,
-                }
-            )
-
-    return df.mapInPandas(run, schema=RESIZED_SCHEMA)
-
-
-def sample_frames(
-    df: DataFrame, n_frames: int = 4, fake: bool = False
-) -> DataFrame:
-    """1→N frame sampling (UDTF shape, mapInPandas): each video row
-    yields ``n_frames`` frame rows; non-video rows pass through as a
-    single frame 0."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-
-        from ..functions import codecs
-
-        for pdf in batches:
-            ids, idxs, contents = [], [], []
-            for mid, kind, c in zip(pdf["media_id"], pdf["kind"], pdf["content"]):
-                if fake:
-                    k = n_frames if kind == "video" else 1
-                    for i in range(k):
-                        digest = hashlib.md5((c or b"") + bytes([i])).digest()
-                        ids.append(mid)
-                        idxs.append(i)
-                        contents.append(digest)
-                elif kind == "video":
-                    # real path: evenly sample the container's frames
-                    # (animated GIF or concatenated-P6 stream)
-                    frames = list(codecs.iter_video_frames(c or b""))
-                    if not frames:
-                        raise codecs.CodecUnavailable("empty raw-video stream")
-                    picks = sorted(
-                        set(
-                            _np.linspace(
-                                0, len(frames) - 1, min(n_frames, len(frames))
-                            ).round().astype(int).tolist()
-                        )
-                    )
-                    for i in picks:
-                        ids.append(mid)
-                        idxs.append(int(i))
-                        contents.append(codecs.encode_ppm(frames[i]))
-                else:
-                    # non-video rows pass through as their single frame
-                    ids.append(mid)
-                    idxs.append(0)
-                    contents.append(c)
-            yield pd.DataFrame(
-                {"media_id": ids, "frame_idx": idxs, "content": contents}
-            )
-
-    return df.mapInPandas(run, schema=FRAME_SCHEMA)
-
-
-def real_media_df(spark, n: int = 24) -> DataFrame:
-    """Deterministic REAL media fixture: PPM images, PCM16 WAV audio,
-    concatenated-P6 raw video — decodable by functions/codecs.py with
-    no libraries."""
-    from ..functions import codecs
-
-    rows = []
-    for i in range(n):
-        rng = np.random.default_rng(1000 + i)
-        kind = ["image", "audio", "video"][i % 3]
-        if kind == "image":
-            img = rng.integers(0, 256, size=(8 + i, 6 + i, 3), dtype=np.uint8)
-            content, w, h, dur = codecs.encode_ppm(img), img.shape[1], img.shape[0], 0
-            mime = "image/x-portable-pixmap"
-        elif kind == "audio":
-            samples = (rng.normal(0, 3000, size=(800 + 10 * i, 2))).astype(np.int16)
-            content, w, h, dur = codecs.encode_wav(samples, 16000), 0, 0, len(samples) * 1000 // 16000
-            mime = "audio/wav"
-        else:
-            frames = [
-                rng.integers(0, 256, size=(6, 5, 3), dtype=np.uint8)
-                for _ in range(3 + i % 4)
-            ]
-            content = b"".join(codecs.encode_ppm(f) for f in frames)
-            w, h, dur = 5, 6, len(frames) * 40
-            mime = "video/x-raw-ppm"
-        rows.append((f"m{i:05d}", kind, content, mime, w, h, dur))
-    return spark.createDataFrame(
-        pd.DataFrame(
-            rows,
-            columns=["media_id", "kind", "content", "mime", "width",
-                     "height", "duration_ms"],
-        ),
-        schema=MEDIA_SCHEMA,
-    )
-
-
-def fake_media_df(spark, n: int = 64) -> DataFrame:
-    """Deterministic binary media fixture."""
-    rows = pd.DataFrame(
-        {
-            "media_id": [f"m{i:05d}" for i in range(n)],
-            "kind": [["image", "audio", "video"][i % 3] for i in range(n)],
-            "content": [bytes([i % 251]) * (100 + i) for i in range(n)],
-            "mime": ["application/octet-stream"] * n,
-            "width": [16 + i for i in range(n)],
-            "height": [16 + i for i in range(n)],
-            "duration_ms": [1000 + i for i in range(n)],
-        }
-    )
-    return spark.createDataFrame(rows, schema=MEDIA_SCHEMA)

@@ -1,38 +1,15 @@
-"""Text cleaning / normalization / filtering stages (SURVEY.md §2.2).
+"""Role/tool filter stage (SURVEY.md §2.2).
 
-All stages are pure-Catalyst column expressions — predicates stay
-pushdown-eligible and inside JVM codegen at any scale.
+A pure-Catalyst predicate: it stays pushdown-eligible and inside JVM
+codegen at any scale. The other text stages (normalize, the 15-rule
+keep conjunction, text stats) are SQL expressions from ``functions/``
+that the contract queries and the streaming pipeline apply directly.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.normalize import (
-    fingerprint_sql,
-    normalize_sql,
-    strip_multimodal_tokens_sql,
-)
-from ..functions.text_rules import keep_sql
-from ..functions.textstats import (
-    bpe_ish_token_count_sql,
-    lang_id_sql,
-    quality_score_sql,
-    token_count_sql,
-)
-
-
-def normalize_text(df: DataFrame, text_col: str = "text",
-                   out_col: str = "text_norm") -> DataFrame:
-    """normalize() semantics (rule_base_filter.py:36-56, sans NFD)."""
-    return df.withColumn(out_col, F.expr(normalize_sql("spark", text_col)))
-
-
-def rule_filter(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """RuleBaseFilter text path (rule_base_filter.py:243-354): keep rows
-    passing all 15 heuristic quality rules."""
-    return df.filter(F.expr(keep_sql("spark", text_col)))
 
 
 def role_tool_filter(
@@ -50,24 +27,3 @@ def role_tool_filter(
         pred = pred | (F.col(role_col).eqNullSafe("tool")
                        & F.col(tool_col).isin(*keep_tools))
     return df.filter(pred)
-
-
-def strip_multimodal_tokens(df: DataFrame, text_col: str = "text",
-                            out_col: str = "text_clean") -> DataFrame:
-    """<image>/<video>/<audio> token strip + newline collapse
-    (conversation_to_message.py:39-41)."""
-    return df.withColumn(out_col, F.expr(strip_multimodal_tokens_sql("spark", text_col)))
-
-
-def text_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus-analytics projection: token counts, language id, quality
-    score, fingerprint — one narrow JVM-side pass."""
-    return df.withColumns(
-        {
-            "n_tokens": F.expr(token_count_sql("spark", text_col)),
-            "n_tokens_bpe": F.expr(bpe_ish_token_count_sql("spark", text_col)),
-            "lang_pred": F.expr(lang_id_sql("spark", text_col)),
-            "quality": F.expr(quality_score_sql("spark", text_col)),
-            "fingerprint": F.expr(fingerprint_sql("spark", text_col)),
-        }
-    )

@@ -17,8 +17,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = 32
-
 
 def build_session(
     app_name: str = "dataflow-mm-lrt-spark",
@@ -28,17 +26,19 @@ def build_session(
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with engine defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    in the sandbox; on a real cluster pass ``None`` and let
-    ``spark-submit`` decide.
+    ``master`` defaults to ``local[n]``, where ``n`` is
+    ``$SPARK_GRAFT_CPUS`` or else the number of CPUs this process may
+    run on; on a real cluster pass ``master`` from ``spark-submit``.
+    ``shuffle_partitions`` defaults to the same ``n``. It is also the
+    state-partition count of a stateful stream, and a streaming
+    checkpoint keeps the count it was created with: a restart with a
+    different value reuses the checkpoint's count, not the new one.
     """
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(
-            os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
-        )
+        shuffle_partitions = cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

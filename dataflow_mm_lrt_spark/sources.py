@@ -1,4 +1,4 @@
-"""Scheme-dispatched table loading/saving (SURVEY.md §2.9 scans/sinks).
+"""Scheme-dispatched table loading (SURVEY.md §2.9 scans).
 
 The reference reads local files by extension (utils/storage.py:77-120),
 hub datasets via ``hf:``/``ms:`` URIs (storage.py:175-201) and
@@ -18,6 +18,9 @@ one entry point:
 * ``hf:``/``ms:`` hub URIs have no public Spark connector and no
   network in this sandbox — the loader names the supported local
   equivalent in its error (download once, read the files).
+
+There is no matching saver: the engine writes through the streaming
+manifest sink (streaming/sink.py), and plain ``df.write`` covers the rest.
 """
 
 from __future__ import annotations
@@ -87,39 +90,3 @@ def load_table(
             "inferSchema", options.get("inferSchema", "true")
         )
     return reader.format(f).load(uri)
-
-
-def save_table(
-    df: DataFrame,
-    uri: str,
-    fmt: str | None = None,
-    mode: str = "error",
-    partition_by: list[str] | None = None,
-    **options: str,
-) -> None:
-    """Save a DataFrame to a scheme-dispatched URI."""
-    if uri.startswith("iceberg:"):
-        if not _iceberg_available(df.sparkSession):
-            raise RuntimeError(
-                "Iceberg runtime jar not on the classpath (see load_table)"
-            )
-        w = df.writeTo(uri[len("iceberg:"):])
-        if mode == "overwrite":
-            w.createOrReplace()
-        else:
-            w.append()
-        return
-    if uri.startswith("jdbc:"):
-        if "dbtable" not in options:
-            raise ValueError("jdbc: sinks need a dbtable= option")
-        df.write.format("jdbc").option("url", uri).options(**options).mode(
-            mode
-        ).save()
-        return
-    f = fmt or _infer_format(uri)
-    writer = df.write.format(f).mode(mode).options(**options)
-    if f == "csv":
-        writer = writer.option("header", "true")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(uri)

@@ -20,10 +20,13 @@ commit manifests keyed by (checkpoint_epoch, partition_id)"):
 
 Scale notes (round-2 fixes of the round-1 sink):
 
-* lineage comes from ONE cached aggregate over the micro-batch
-  (per-``spark_partition_id`` counts + ts bounds) collected alongside
-  the write — the round-1 sink re-read every file it had just written,
-  a second full I/O pass per epoch;
+* epoch metrics ride along with the write job: ``observe()`` gives
+  the epoch's total rows and ts bounds with no extra pass and no
+  caching. Per-file lineage (partition id from the part-file name,
+  bytes, rows) comes from the directory listing and each file's parquet
+  footer (``_parquet_row_count``, metadata only). The round-1 sink
+  re-read every file it had just written, a second full I/O pass per
+  epoch;
 * every path operation goes through the Hadoop FileSystem API resolved
   from the sink URI, so the commit protocol works unchanged on
   HDFS/S3A/ABFS, not just local POSIX (metadata-only calls; manifests

@@ -22,8 +22,11 @@ eviction (BASELINE.json north_star), via ``applyInPandasWithState``:
   (bounded state; the streaming analogue of the reference's
   max_corpus=10000 bound, image_diversity_filter.py:15).
 
-The group function is Arrow-batched and fully pandas-vectorized — the
-only Python executed per *row* is pickle of the bounded buffer.
+The group function is Arrow-batched and numpy-vectorized. Outside the
+optional near-dup gate, three steps run Python per row: ``_fp_key``
+once per fresh row (the state key of its fingerprint), the keep-first
+membership loop once per ready row, and the pickle of the bounded
+buffer.
 Emission is deterministic for a fixed input stream + watermark sequence
 — the contract pytest replays (FIXTURES.md §4).
 
@@ -347,26 +350,4 @@ def ordered_assembly(
             outputMode="append",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-    )
-
-
-def exact_stream_dedup(
-    df: DataFrame,
-    watermark_delay: str = "10 minutes",
-    text_col: str = "text",
-) -> DataFrame:
-    """Built-in global streaming dedup (first *arrival* wins) — Spark's
-    ``dropDuplicatesWithinWatermark`` so fingerprint state is EVICTED
-    once the watermark passes (round-1 used ``dropDuplicates`` without
-    the event-time column in the key, which never evicts and grows state
-    unboundedly on a long-running stream). A fingerprint re-arriving
-    after its state expired is emitted again — the documented horizon
-    semantics of watermark dedup; corpus-global exactness beyond the
-    horizon belongs to the batch ``dedup.exact_keep_first`` compaction.
-    The keyed, order-deterministic dedup lives in ``ordered_assembly``."""
-    return (
-        df.withColumn("_fp", F.expr(fingerprint_sql("spark", text_col)))
-        .withWatermark("ts", watermark_delay)
-        .dropDuplicatesWithinWatermark(["_fp"])
-        .drop("_fp")
     )

@@ -15,6 +15,13 @@ import pytest
 
 from dataflow_mm_lrt_spark.functions import audio_codecs as ac
 from dataflow_mm_lrt_spark.functions import codecs
+from media_fixtures import (
+    alaw_encode,
+    encode_wav_g711,
+    encode_wav_ima,
+    ima_encode_samples,
+    mulaw_encode,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -42,16 +49,16 @@ def test_g711_lattice_idempotence_exhaustive():
     # μ-law: 0x7F and 0xFF both decode to 0; the canonical encoder maps
     # 0 → 0xFF, so skip the redundant negative-zero code
     mu = codes[codes != 0x7F]
-    assert np.array_equal(ac.mulaw_encode(ac.mulaw_decode(mu)), mu)
-    assert ac.mulaw_encode(ac.mulaw_decode(np.array([0x7F])))[0] == 0xFF
-    assert np.array_equal(ac.alaw_encode(ac.alaw_decode(codes)), codes)
+    assert np.array_equal(mulaw_encode(ac.mulaw_decode(mu)), mu)
+    assert mulaw_encode(ac.mulaw_decode(np.array([0x7F])))[0] == 0xFF
+    assert np.array_equal(alaw_encode(ac.alaw_decode(codes)), codes)
 
 
 def test_g711_quantization_error_bounded():
     rng = np.random.default_rng(7)
     x = rng.integers(-32768, 32768, 4096).astype(np.int16)
-    for enc, dec, bias in ((ac.mulaw_encode, ac.mulaw_decode, 132),
-                           (ac.alaw_encode, ac.alaw_decode, 0)):
+    for enc, dec, bias in ((mulaw_encode, ac.mulaw_decode, 132),
+                           (alaw_encode, ac.alaw_decode, 0)):
         err = np.abs(dec(enc(x)).astype(np.int64) - x)
         # step size in segment e is 2^(e+3) ≤ (|x|+bias+step)/16 — allow
         # one full step plus the A-law 13-bit floor
@@ -61,7 +68,7 @@ def test_g711_quantization_error_bounded():
 
 def test_mulaw_encode_clips_at_spec_limit():
     # values past the μ-law clip point (32635) all land on the peak code
-    assert ac.mulaw_encode(np.array([32635, 32700, 32767])).tolist() == [
+    assert mulaw_encode(np.array([32635, 32700, 32767])).tolist() == [
         0x80, 0x80, 0x80]
 
 
@@ -89,7 +96,7 @@ def test_ima_encode_decode_roundtrip_snr():
     t = np.arange(8000)
     x = (6000 * np.sin(2 * np.pi * 440 * t / 8000)
          + 800 * rng.standard_normal(8000)).astype(np.int16)
-    nibs, _, _ = ac.ima_encode_samples(x[1:], int(x[0]), 0)
+    nibs, _, _ = ima_encode_samples(x[1:], int(x[0]), 0)
     y = np.concatenate([[x[0]], ac.ima_decode_nibbles(nibs, int(x[0]), 0)])
     err = (y.astype(np.float64) - x.astype(np.float64))
     snr = 10 * np.log10(np.mean(x.astype(np.float64) ** 2)
@@ -118,7 +125,7 @@ def test_wav_g711_roundtrip(law, tag, ch):
     x = np.tile(lattice, 4).astype(np.int16)
     if ch == 2:
         x = np.stack([x, x[::-1]], axis=1)
-    buf = codecs.encode_wav_g711(x, 8000, law=law)
+    buf = encode_wav_g711(x, 8000, law=law)
     got, rate = codecs.decode_wav(buf)
     assert rate == 8000
     assert got.shape == (x.shape[0], ch)
@@ -129,7 +136,7 @@ def test_wav_g711_roundtrip(law, tag, ch):
 @pytest.mark.parametrize("ch", [1, 2])
 def test_wav_ima_adpcm_roundtrip(ch):
     x = _sine(n=3001, ch=ch)  # non-multiple of block → exercises fact trim
-    buf = codecs.encode_wav_ima(x, 8000)
+    buf = encode_wav_ima(x, 8000)
     got, rate = codecs.decode_wav(buf)
     assert rate == 8000
     x2 = x if x.ndim == 2 else x[:, None]
@@ -175,7 +182,7 @@ def test_wav_pcm_width_variants():
     assert np.abs(gotf[:, 0].astype(np.int64) - x.astype(np.int64)).max() <= 1
 
     # WAVE_FORMAT_EXTENSIBLE wrapping μ-law: SubFormat GUID first 2 bytes
-    codes = ac.mulaw_encode(x)
+    codes = mulaw_encode(x)
     guid = struct.pack("<H", 7) + b"\x00\x00" + bytes(12)
     extra = struct.pack("<HHI", 22, 8, 1) + guid
     gote, _ = codecs.decode_wav(
@@ -185,6 +192,6 @@ def test_wav_pcm_width_variants():
 
 def test_decode_audio_dispatches_companded_wav():
     x = ac.mulaw_decode(np.arange(256, dtype=np.uint8)).astype(np.int16)
-    buf = codecs.encode_wav_g711(x, 8000, law="mulaw")
+    buf = encode_wav_g711(x, 8000, law="mulaw")
     got, rate = codecs.decode_audio(buf)
     assert rate == 8000 and np.array_equal(got[:, 0], x)

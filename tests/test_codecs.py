@@ -1,5 +1,5 @@
 """Pure-numpy codecs (functions/codecs.py) + the real (non-fake)
-multimodal operator paths: PPM/BMP/WAV round-trips, bilinear resize
+multimodal feature path: PPM/BMP/WAV round-trips, bilinear resize
 semantics, concatenated-P6 video frame walking — all with zero media
 libraries."""
 
@@ -9,13 +9,14 @@ import numpy as np
 import pytest
 
 from dataflow_mm_lrt_spark.functions import codecs
+from media_fixtures import encode_ppm, fake_media_df, real_media_df
 
 
 def test_ppm_roundtrip():
     rng = np.random.default_rng(3)
     img = rng.integers(0, 256, size=(11, 7, 3), dtype=np.uint8)
-    out, end = codecs.decode_ppm(codecs.encode_ppm(img))
-    assert (out == img).all() and end == len(codecs.encode_ppm(img))
+    out, end = codecs.decode_ppm(encode_ppm(img))
+    assert (out == img).all() and end == len(encode_ppm(img))
 
 
 def test_ppm_comments_and_whitespace():
@@ -78,7 +79,7 @@ def test_bilinear_2x_flat_regions():
 def test_video_stream_walk():
     rng = np.random.default_rng(7)
     frames = [rng.integers(0, 256, size=(4, 3, 3), dtype=np.uint8) for _ in range(5)]
-    buf = b"".join(codecs.encode_ppm(f) for f in frames)
+    buf = b"".join(encode_ppm(f) for f in frames)
     out = list(codecs.iter_ppm_frames(buf))
     assert len(out) == 5 and all((a == b).all() for a, b in zip(out, frames))
 
@@ -93,10 +94,7 @@ def test_unknown_bytes_raise_codec_unavailable():
 # ---------------------------------------------------------------------------
 
 def test_extract_features_real(spark):
-    from dataflow_mm_lrt_spark.operators.multimodal import (
-        extract_features,
-        real_media_df,
-    )
+    from dataflow_mm_lrt_spark.operators.multimodal import extract_features
 
     df = real_media_df(spark, n=12)
     out = {r["media_id"]: r for r in extract_features(df, fake=False).collect()}
@@ -116,47 +114,27 @@ def test_extract_features_real(spark):
             assert f[0] >= 3  # n_frames
 
 
-def test_resize_media_real_roundtrip(spark):
-    from dataflow_mm_lrt_spark.operators.multimodal import (
-        real_media_df,
-        resize_media,
-    )
-
-    df = real_media_df(spark, n=3).filter("kind = 'image'")
-    out = resize_media(df, width=4, height=5, fake=False).collect()
-    assert len(out) == 1
-    img, _ = codecs.decode_ppm(bytes(out[0]["content"]))
-    assert img.shape == (5, 4, 3)
+def test_resize_bilinear_real_image_roundtrip(spark):
+    (row,) = real_media_df(spark, n=3).filter("kind = 'image'").collect()
+    img = codecs.decode_image(bytes(row["content"]))
+    assert img.shape == (row["height"], row["width"], 3)
+    small, _ = codecs.decode_ppm(encode_ppm(codecs.resize_bilinear(img, 4, 5)))
+    assert small.shape == (5, 4, 3)
 
 
-def test_sample_frames_real(spark):
-    from dataflow_mm_lrt_spark.operators.multimodal import (
-        real_media_df,
-        sample_frames,
-    )
-
-    df = real_media_df(spark, n=12)
-    out = sample_frames(df, n_frames=2, fake=False).collect()
-    by_id = {}
-    for r in out:
-        by_id.setdefault(r["media_id"], []).append(r)
-    src = {r["media_id"]: r["kind"] for r in df.collect()}
-    for mid, rows in by_id.items():
-        if src[mid] == "video":
-            assert len(rows) == 2
-            for r in rows:
-                codecs.decode_ppm(bytes(r["content"]))  # decodable frames
-        else:
-            assert len(rows) == 1 and rows[0]["frame_idx"] == 0
+def test_iter_video_frames_real_media(spark):
+    videos = real_media_df(spark, n=12).filter("kind = 'video'").collect()
+    assert len(videos) == 4
+    for r in videos:
+        frames = list(codecs.iter_video_frames(bytes(r["content"])))
+        assert len(frames) * 40 == r["duration_ms"]
+        assert all(f.shape == (r["height"], r["width"], 3) for f in frames)
 
 
 def test_fake_path_unchanged(spark):
     """The driver contract row runs fake=True — its values must be
     byte-stable across the real-codec change."""
-    from dataflow_mm_lrt_spark.operators.multimodal import (
-        extract_features,
-        fake_media_df,
-    )
+    from dataflow_mm_lrt_spark.operators.multimodal import extract_features
 
     out = extract_features(fake_media_df(spark, n=4), fake=True).collect()
     assert len(out) == 4 and all(len(r["feature"]) == 8 for r in out)

@@ -28,6 +28,7 @@ from dataflow_mm_lrt_spark.functions.gif import (
     lzw_decode,
     lzw_encode,
 )
+from media_fixtures import encode_ppm
 
 
 # -- independent LSB-first bit packer (spec rule, NOT the codec code) --
@@ -243,23 +244,17 @@ def test_iter_video_frames_gif_and_ppm():
     got = list(codecs.iter_video_frames(encode_gif(frames)))
     assert len(got) == 3
     np.testing.assert_array_equal(got[1], frames[1])
-    ppm_stream = b"".join(codecs.encode_ppm(f) for f in frames)
+    ppm_stream = b"".join(encode_ppm(f) for f in frames)
     got2 = list(codecs.iter_video_frames(ppm_stream))
     assert len(got2) == 3
     np.testing.assert_array_equal(got2[2], frames[2])
 
 
-def test_sample_frames_real_gif_video(spark):
-    from dataflow_mm_lrt_spark.operators.multimodal import sample_frames
-
+def test_iter_video_frames_real_gif_video():
     frames = [np.full((4, 4, 3), 10 * (i + 1), dtype=np.uint8) for i in range(6)]
-    rows = [("g1", "video", bytearray(encode_gif(frames)))]
-    df = spark.createDataFrame(rows, "media_id string, kind string, content binary")
-    out = sample_frames(df, n_frames=3, fake=False).collect()
-    assert [r["frame_idx"] for r in out] == [0, 2, 5]
-    for r in out:
-        img = codecs.decode_ppm(bytes(r["content"]))[0]
-        want = frames[r["frame_idx"]]
+    got = list(codecs.iter_video_frames(encode_gif(frames)))
+    assert len(got) == 6
+    for img, want in zip(got, frames):
         np.testing.assert_array_equal(img, want)
 
 

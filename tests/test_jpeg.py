@@ -27,6 +27,7 @@ from dataflow_mm_lrt_spark.functions.jpeg import (
     encode_jpeg,
     optimal_table,
 )
+from media_fixtures import encode_jpeg_progressive
 
 rng = np.random.default_rng(21)
 
@@ -215,8 +216,6 @@ def test_progressive_decode_equals_baseline(quality, subsample):
     cross-check of the multi-scan reassembly (DC first/refine, AC
     first/refine, EOBRUN) against the independently spec-tested
     baseline path."""
-    from dataflow_mm_lrt_spark.functions.jpeg import encode_jpeg_progressive
-
     img = _structured()
     base = decode_jpeg(encode_jpeg(img, quality=quality, subsample=subsample))
     prog = decode_jpeg(
@@ -226,8 +225,6 @@ def test_progressive_decode_equals_baseline(quality, subsample):
 
 
 def test_progressive_grayscale_and_odd_sizes():
-    from dataflow_mm_lrt_spark.functions.jpeg import encode_jpeg_progressive
-
     for h, w in [(8, 8), (9, 17), (1, 40)]:
         g = _structured(max(h, 1), max(w, 1))[..., 0][:h, :w]
         base = decode_jpeg(encode_jpeg(g, quality=75))
@@ -242,8 +239,6 @@ def test_progressive_dc_only_truncation_is_blockwise_mean():
     ANALYTIC property of the progressive path, independent of the
     baseline decoder, and exactly the coarse-first rendering a
     truncated progressive download shows."""
-    from dataflow_mm_lrt_spark.functions.jpeg import encode_jpeg_progressive
-
     g = _structured(32, 32)[..., 0]
     blob = encode_jpeg_progressive(
         g, quality=100, scans=[((0,), 0, 0, 0, 0)]
@@ -257,8 +252,6 @@ def test_progressive_dc_only_truncation_is_blockwise_mean():
 def test_progressive_no_successive_approximation_script():
     """Spectral selection alone (Al = 0 everywhere, no refinement
     scans) — the other common scan script in the wild."""
-    from dataflow_mm_lrt_spark.functions.jpeg import encode_jpeg_progressive
-
     img = _structured()
     scans = [
         ((0, 1, 2), 0, 0, 0, 0),
@@ -274,8 +267,6 @@ def test_progressive_no_successive_approximation_script():
 def test_progressive_flat_image_long_eob_runs():
     """A nearly flat image maximizes cross-block EOB runs (the deferred
     EOBRUN symbol + buffered correction bits path on both sides)."""
-    from dataflow_mm_lrt_spark.functions.jpeg import encode_jpeg_progressive
-
     img = np.full((64, 64, 3), 77, dtype=np.uint8)
     img[13, 29] = [90, 60, 100]  # one disturbance so not ALL bands empty
     base = decode_jpeg(encode_jpeg(img, quality=60))
@@ -284,8 +275,6 @@ def test_progressive_flat_image_long_eob_runs():
 
 
 def test_progressive_dispatches_through_decode_image():
-    from dataflow_mm_lrt_spark.functions.jpeg import encode_jpeg_progressive
-
     img = _structured(24, 24)
     blob = encode_jpeg_progressive(img, quality=85)
     out = codecs.decode_image(blob)

@@ -1,6 +1,6 @@
 """Media metric operators over REAL codec bytes, with analytic oracles:
 every expected value below is computed by construction of the fixture
-(known luma levels, known cut positions, known sine amplitudes), not by
+(known pixel levels, known frame delays, known sine amplitudes), not by
 re-running the operator's own math.
 """
 
@@ -9,60 +9,11 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from dataflow_mm_lrt_spark.functions import codecs
-from dataflow_mm_lrt_spark.functions.gif import encode_gif
+from dataflow_mm_lrt_spark.functions.codecs import encode_wav
 from dataflow_mm_lrt_spark.functions.jpeg import encode_jpeg
 from dataflow_mm_lrt_spark.functions.png import encode_png
 from dataflow_mm_lrt_spark.operators import media_metrics as mm
-
-
-def _gray_frames(values, h=8, w=8):
-    return [np.full((h, w, 3), v, dtype=np.uint8) for v in values]
-
-
-def _video_df(spark, frames, mid="v1"):
-    rows = [(mid, "video", bytearray(encode_gif(frames)))]
-    return spark.createDataFrame(
-        rows, "media_id string, kind string, content binary"
-    )
-
-
-def test_video_metrics_analytic(spark):
-    # gray frames 10,10,110: luma == pixel value; diffs are 0 and 100
-    df = _video_df(spark, _gray_frames([10, 10, 110]))
-    (r,) = mm.video_metrics(df, static_eps=1.0).collect()
-    assert (r["n_frames"], r["width"], r["height"]) == (3, 8, 8)
-    assert r["lum_mean"] == pytest.approx((10 + 10 + 110) / 3, abs=0.6)
-    assert r["lum_min"] == pytest.approx(10, abs=0.6)
-    assert r["lum_max"] == pytest.approx(110, abs=0.6)
-    assert r["motion"] == pytest.approx(50.0, abs=0.6)  # (0 + 100) / 2
-    assert r["static_ratio"] == pytest.approx(0.5)
-
-
-def test_video_metrics_single_frame(spark):
-    df = _video_df(spark, _gray_frames([42]))
-    (r,) = mm.video_metrics(df).collect()
-    assert r["motion"] == 0.0 and r["static_ratio"] == 1.0
-
-
-def test_video_scene_rows_cut_detection(spark):
-    # frames: 5x level 20, then 4x level 200 → one cut at frame 5
-    df = _video_df(spark, _gray_frames([20] * 5 + [200] * 4))
-    rows = mm.video_scene_rows(df, threshold=30.0).collect()
-    assert [(r["scene_idx"], r["start_frame"], r["end_frame"]) for r in rows] \
-        == [(0, 0, 5), (1, 5, 9)]
-
-
-def test_video_scene_rows_min_merge_and_max_split(spark):
-    # cuts at every frame (alternating 0/255) with min_frames=2:
-    # everything merges into one scene, then max_frames=3 splits it
-    df = _video_df(spark, _gray_frames([0, 255] * 4))
-    rows = mm.video_scene_rows(
-        df, threshold=30.0, min_frames=2, max_frames=3
-    ).collect()
-    spans = [(r["start_frame"], r["end_frame"]) for r in rows]
-    assert spans == [(0, 3), (3, 6), (6, 8)]
-    assert all(r["n_frames"] == r["end_frame"] - r["start_frame"] for r in rows)
+from media_fixtures import encode_ppm
 
 
 def test_image_metrics_flat_vs_textured(spark):
@@ -92,7 +43,7 @@ def test_image_metrics_flat_vs_textured(spark):
 
 def _wav_bytes(mono_f64, rate=8000):
     s = np.clip(mono_f64, -32768, 32767).astype(np.int16).reshape(-1, 1)
-    return codecs.encode_wav(s, rate)
+    return encode_wav(s, rate)
 
 
 def test_audio_metrics_analytic(spark):
@@ -112,91 +63,6 @@ def test_audio_metrics_analytic(spark):
     assert r["clipping_ratio"] == pytest.approx(0.5, abs=0.02)
     # overall RMS of (0-half, full-scale-half) = full_scale/sqrt(2) → ≈ -3.01 dB
     assert r["rms_db"] == pytest.approx(-3.01, abs=0.1)
-
-
-def test_audio_vad_spans(spark):
-    rate = 8000
-    sec = np.ones(rate)
-    # silence 1s, voice 1s, silence 1s, voice 0.5s (to stream end)
-    x = np.concatenate(
-        [0 * sec, 20000 * sec, 0 * sec, 20000 * sec[: rate // 2]]
-    )
-    df = spark.createDataFrame(
-        [("a1", "audio", bytearray(_wav_bytes(x, rate)))],
-        "media_id string, kind string, content binary",
-    )
-    (r,) = mm.audio_vad(df, frame_ms=20, threshold_db=-40.0).collect()
-    spans = [(s["start"], s["end"]) for s in r["timestamps"]]
-    assert spans == [(1.0, 2.0), (3.0, 3.5)]
-
-
-def test_audio_chunk_rows_slices_real_wav(spark):
-    rate = 8000
-    x = np.arange(2 * rate, dtype=np.float64) % 1000
-    df = spark.createDataFrame(
-        [
-            (
-                "a1",
-                bytearray(_wav_bytes(x, rate)),
-                [{"start": 0.25, "end": 0.5}, {"start": 1.0, "end": 2.0}],
-            )
-        ],
-        "media_id string, content binary, "
-        "timestamps array<struct<start:double,end:double>>",
-    )
-    rows = mm.audio_chunk_rows(df, max_duration_s=0.5).collect()
-    # second span (1s long) splits into two 0.5s chunks
-    assert [(r["chunk_idx"], r["start"], r["end"]) for r in rows] == [
-        (0, 0.25, 0.5),
-        (1, 1.0, 1.5),
-        (2, 1.5, 2.0),
-    ]
-    for r in rows:
-        samples, out_rate = codecs.decode_wav(bytes(r["content"]))
-        assert out_rate == rate
-        assert samples.shape[0] == int(round((r["end"] - r["start"]) * rate))
-        lo = int(round(r["start"] * rate))
-        np.testing.assert_array_equal(
-            samples[:, 0], x[lo : lo + samples.shape[0]].astype(np.int16)
-        )
-
-
-def test_vad_feeds_chunker(spark):
-    """The reference's generator→chunker pipeline: VAD timestamps
-    joined back onto the audio bytes, then sliced to chunk rows."""
-    rate = 8000
-    x = np.concatenate([np.zeros(rate), 20000 * np.ones(rate)])
-    df = spark.createDataFrame(
-        [("a1", "audio", bytearray(_wav_bytes(x, rate)))],
-        "media_id string, kind string, content binary",
-    )
-    vad = mm.audio_vad(df, frame_ms=20, threshold_db=-40.0)
-    joined = df.select("media_id", "content").join(vad, "media_id")
-    rows = mm.audio_chunk_rows(joined).collect()
-    assert [(r["start"], r["end"]) for r in rows] == [(1.0, 2.0)]
-    samples, _ = codecs.decode_wav(bytes(rows[0]["content"]))
-    assert samples.shape[0] == rate and int(samples[0, 0]) == 20000
-
-
-def test_video_metrics_compose_with_range_filter(spark):
-    """The VideoScoreFilter shape: metric extraction → schema-tolerant
-    range filter (operators/refine.range_filter)."""
-    from dataflow_mm_lrt_spark.operators.refine import range_filter
-
-    calm = _gray_frames([100, 101, 102, 103])
-    jumpy = _gray_frames([0, 255, 0, 255])
-    rows = [
-        ("calm", "video", bytearray(encode_gif(calm))),
-        ("jumpy", "video", bytearray(encode_gif(jumpy))),
-    ]
-    df = spark.createDataFrame(
-        rows, "media_id string, kind string, content binary"
-    )
-    scored = mm.video_metrics(df)
-    kept = range_filter(
-        scored, {"motion": (None, 50.0), "missing_col": (0, 1)}
-    ).collect()
-    assert [r["media_id"] for r in kept] == ["calm"]
 
 
 # ------------------------------------------------------------- video_info
@@ -222,7 +88,7 @@ def test_video_info_gif_timing_analytic(spark):
 
 def test_video_info_raw_stream_has_no_timing(spark):
     frames = [np.full((8, 8, 3), v, dtype=np.uint8) for v in (1, 2)]
-    raw = b"".join(codecs.encode_ppm(f) for f in frames)
+    raw = b"".join(encode_ppm(f) for f in frames)
     df = spark.createDataFrame(
         [("v1", bytearray(raw))], "media_id string, content binary"
     )
@@ -275,96 +141,3 @@ def test_resolution_keep_any_all_truth_table(spark):
     }
     with pytest.raises(ValueError):
         mm.resolution_keep(df, any_or_all="most")
-
-
-# --------------------------------------------------------- video_clip_rows
-
-
-def test_video_clip_rows_cuts_real_clips(spark):
-    # 5x level 20 then 4x level 200 → one cut at frame 5; each clip is a
-    # standalone GIF whose decoded frames equal the source's span
-    frames = _gray_frames([20] * 5 + [200] * 4)
-    df = _video_df(spark, frames)
-    rows = sorted(
-        mm.video_clip_rows(df, threshold=30.0).collect(),
-        key=lambda r: r["scene_idx"],
-    )
-    assert [(r["scene_idx"], r["start_frame"], r["end_frame"]) for r in rows] \
-        == [(0, 0, 5), (1, 5, 9)]
-    for r in rows:
-        assert r["codec"] == "gif"
-        clip_frames = list(codecs.iter_video_frames(bytes(r["content"])))
-        assert len(clip_frames) == r["n_frames"]
-        src_span = frames[r["start_frame"]: r["end_frame"]]
-        for got, want in zip(clip_frames, src_span):
-            assert np.array_equal(got, want)
-
-
-def test_video_clip_rows_preserves_gif_timing(spark):
-    from dataflow_mm_lrt_spark.functions.gif import encode_gif, iter_gif_frames
-
-    frames = _gray_frames([10, 10, 10])
-    df = spark.createDataFrame(
-        [("v1", "video", bytearray(encode_gif(frames, delay_cs=7)))],
-        "media_id string, kind string, content binary",
-    )
-    (r,) = mm.video_clip_rows(df, threshold=30.0).collect()
-    delays = [d for _, d in iter_gif_frames(bytes(r["content"]))]
-    assert delays == [7, 7, 7]
-
-
-def test_video_clip_rows_max_split_and_chainable(spark):
-    # alternating frames cut everywhere; min_frames=2 merges all, then
-    # max_frames=3 splits → clips feed video_metrics unchanged
-    df = _video_df(spark, _gray_frames([0, 255] * 4))
-    clips = mm.video_clip_rows(df, threshold=30.0, min_frames=2, max_frames=3)
-    spans = [(r["start_frame"], r["end_frame"]) for r in
-             sorted(clips.collect(), key=lambda r: r["scene_idx"])]
-    assert spans == [(0, 3), (3, 6), (6, 8)]
-    downstream = mm.video_metrics(
-        clips.selectExpr("concat(media_id, '#', scene_idx) AS media_id", "content")
-    ).collect()
-    assert {r["n_frames"] for r in downstream} == {3, 2}
-
-
-def test_video_clip_rows_variable_delays_per_span(spark):
-    """ADVICE r5: each clip must carry ITS span's own per-frame delays,
-    not the source's first delay replicated — variable-delay GIF timing
-    survives the cut (zero delays render at the 1 cs floor)."""
-    from dataflow_mm_lrt_spark.functions.gif import encode_gif, iter_gif_frames
-
-    # two scenes (luma jump at frame 2) with per-frame delays 2,3 | 9,0
-    frames = _gray_frames([10, 10, 200, 200])
-    blob = encode_gif(frames, delay_cs=[2, 3, 9, 0])
-    df = spark.createDataFrame(
-        [("v1", "video", bytearray(blob))],
-        "media_id string, kind string, content binary",
-    )
-    rows = sorted(
-        mm.video_clip_rows(df, threshold=30.0).collect(),
-        key=lambda r: r["scene_idx"],
-    )
-    assert [(r["start_frame"], r["end_frame"]) for r in rows] == [(0, 2), (2, 4)]
-    got = [
-        [d for _, d in iter_gif_frames(bytes(r["content"]))] for r in rows
-    ]
-    assert got == [[2, 3], [9, 1]]  # span-local delays; 0 floored to 1
-
-
-def test_video_clip_rows_undecodable_rows_skip_not_fail(spark):
-    """ADVICE r5: empty/corrupt videos must take the per-row error path
-    (zero clip rows for that media_id), never a task death — decodable
-    neighbors in the same batch still emit."""
-    good = _gray_frames([10, 10, 200, 200])
-    rows = [
-        ("ok", "video", bytearray(encode_gif(good))),
-        ("empty", "video", bytearray(b"")),
-        ("corrupt", "video", bytearray(b"GIF89a\x01\x02trunc")),
-        ("notvideo", "video", bytearray(b"\x89PNG\r\n\x1a\nnope")),
-    ]
-    df = spark.createDataFrame(
-        rows, "media_id string, kind string, content binary"
-    )
-    out = mm.video_clip_rows(df, threshold=30.0).collect()
-    assert {r["media_id"] for r in out} == {"ok"}
-    assert len(out) == 2  # the two scenes of the decodable row

@@ -2,14 +2,12 @@
 
 from __future__ import annotations
 
-import json
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import functions as F
 
 from dataflow_mm_lrt_spark.operators import assembly, dedup, multimodal, ranking
 from dataflow_mm_lrt_spark.oracle import reference_port as ref
+from media_fixtures import fake_media_df
 
 
 def test_assembly_catalyst_matches_reference_port(spark, transcripts_df, transcripts_pdf):
@@ -26,28 +24,6 @@ def test_assembly_catalyst_matches_reference_port(spark, transcripts_df, transcr
         g = got.loc[conv_id]
         g_msgs = [{"role": m["role"], "content": m["content"]} for m in g["messages"]]
         assert g_msgs == exp, conv_id
-
-
-def test_assembly_pandas_variant_agrees(spark, transcripts_df):
-    cat = (
-        assembly.assemble_conversations(transcripts_df)
-        .toPandas()
-        .set_index("conv_id")
-        .sort_index()
-    )
-    pnd = (
-        assembly.assemble_conversations_pandas(transcripts_df)
-        .toPandas()
-        .set_index("conv_id")
-        .sort_index()
-    )
-    assert list(cat.index) == list(pnd.index)
-    for conv_id in cat.index:
-        a = [dict(m.asDict()) if hasattr(m, "asDict") else dict(m) for m in cat.loc[conv_id, "messages"]]
-        b = json.loads(pnd.loc[conv_id, "messages_json"])
-        b = [{"role": m["role"], "content": m["content"]} for m in b]
-        a = [{"role": m["role"], "content": m["content"]} for m in a]
-        assert a == b, conv_id
 
 
 def test_exact_keep_first_matches_sequential_semantics(spark, transcripts_pdf):
@@ -101,7 +77,7 @@ def test_keep_top_fraction(spark):
 
 
 def test_multimodal_feature_stub_deterministic(spark):
-    media = multimodal.fake_media_df(spark, n=16)
+    media = fake_media_df(spark, n=16)
     a = multimodal.extract_features(media, fake=True).toPandas().set_index("media_id")
     b = multimodal.extract_features(media, fake=True).toPandas().set_index("media_id")
     for mid in a.index:
@@ -113,37 +89,9 @@ def test_multimodal_real_decode_raises(spark):
     """Undecodable bytes (not PPM/BMP/WAV/P6-stream, no optional libs)
     raise CodecUnavailable on the real path (r3: uncompressed formats
     now decode for real — see tests/test_codecs.py)."""
-    media = multimodal.fake_media_df(spark, n=2)  # garbage bytes
+    media = fake_media_df(spark, n=2)  # garbage bytes
     try:
         multimodal.extract_features(media, fake=False).collect()
         raise AssertionError("expected CodecUnavailable from unknown bytes")
     except Exception as e:  # Py4J wraps the worker exception
         assert "CodecUnavailable" in str(e)  # any kind's task may surface first
-
-
-def test_multimodal_resize_stub(spark):
-    media = multimodal.fake_media_df(spark, n=12)
-    out = multimodal.resize_media(media, 8, 8, fake=True).collect()
-    assert len(out) == 12
-    assert all(len(r["content"]) == 64 for r in out)
-    assert all((r["width"], r["height"]) == (8, 8) for r in out)
-
-
-def test_multimodal_frame_sampling_one_to_n(spark):
-    media = multimodal.fake_media_df(spark, n=12)
-    vids = media.filter("kind = 'video'").count()
-    out = multimodal.sample_frames(media, n_frames=3, fake=True)
-    rows = out.collect()
-    # 1→N for videos, 1→1 pass-through otherwise; deterministic
-    assert len(rows) == vids * 3 + (12 - vids)
-    assert [tuple(r) for r in rows] == [tuple(r) for r in out.collect()]
-
-
-def test_multimodal_codec_gates_raise(spark):
-    import pytest as _pytest
-
-    media = multimodal.fake_media_df(spark, n=3)  # garbage bytes
-    with _pytest.raises(Exception, match="not PPM/BMP"):
-        multimodal.resize_media(media, 8, 8, fake=False).collect()
-    with _pytest.raises(Exception, match="not a concatenated-P6"):
-        multimodal.sample_frames(media, fake=False).collect()

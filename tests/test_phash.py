@@ -15,8 +15,9 @@ import numpy as np
 import pytest
 
 from dataflow_mm_lrt_spark.functions import codecs
-from dataflow_mm_lrt_spark.functions.phash import hamming64, phash64
+from dataflow_mm_lrt_spark.functions.phash import phash64
 from dataflow_mm_lrt_spark.operators import dedup
+from media_fixtures import encode_ppm, hamming64
 
 
 def _img(seed: int, h: int = 64, w: int = 64) -> np.ndarray:
@@ -130,7 +131,7 @@ def test_phash_near_dup_end_to_end(spark):
         3: _img(12),
     }
     rows = [
-        (i, bytearray(codecs.encode_ppm(img))) for i, img in imgs.items()
+        (i, bytearray(encode_ppm(img))) for i, img in imgs.items()
     ] + [(4, bytearray(b"not an image at all"))]
     df = spark.createDataFrame(rows, "media_id int, content binary")
     out = {r["media_id"]: r for r in dedup.phash_near_dup(df).collect()}
@@ -145,17 +146,17 @@ def test_image_diversity_filter_and_semantics(spark):
     text_a = "the quick brown fox jumps over the lazy dog " * 3
     text_b = "completely different words about spark streaming engines"
     rows = [
-        (0, text_a, bytearray(codecs.encode_ppm(_img(20)))),
+        (0, text_a, bytearray(encode_ppm(_img(20)))),
         # text dup of 0, novel image → dropped
-        (1, text_a, bytearray(codecs.encode_ppm(_img(21)))),
+        (1, text_a, bytearray(encode_ppm(_img(21)))),
         # novel text, image dup of 0 → dropped
-        (2, text_b, bytearray(codecs.encode_ppm(_img(20)))),
+        (2, text_b, bytearray(encode_ppm(_img(20)))),
         # novel both → kept
-        (3, "alpha beta gamma delta epsilon zeta eta theta", bytearray(codecs.encode_ppm(_img(22)))),
+        (3, "alpha beta gamma delta epsilon zeta eta theta", bytearray(encode_ppm(_img(22)))),
         # undecodable image → dropped
         (4, "some novel text of reasonable length here", bytearray(b"xx")),
         # too-short text → dropped
-        (5, "ab", bytearray(codecs.encode_ppm(_img(23)))),
+        (5, "ab", bytearray(encode_ppm(_img(23)))),
     ]
     df = spark.createDataFrame(rows, "media_id int, text string, content binary")
     out = {r["media_id"]: r for r in dedup.image_diversity_filter(df).collect()}

@@ -10,8 +10,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from dataflow_mm_lrt_spark.functions.normalize import normalize_sql
 from dataflow_mm_lrt_spark.functions.text_rules import RULES, keep_sql, rule_flag_sql
-from dataflow_mm_lrt_spark.oracle.reference_port import apply_text_filters
+from dataflow_mm_lrt_spark.oracle.reference_port import apply_text_filters, normalize
 
 EDGE_CASES = [
     None,
@@ -69,6 +70,19 @@ def test_duckdb_dialect_matches_reference_port(corpus):
         f"SELECT expected, coalesce({keep_sql('duckdb', 'text')}, false) AS got FROM t"
     ).df()
     assert (res.expected == res.got).all()
+
+
+def test_normalize_sql_matches_reference_with_nfd(corpus):
+    """``normalize_sql`` skips the reference's NFD step; on this corpus
+    that delta is empty: the SQL form equals ``normalize(t)`` with NFD on
+    for every text."""
+    texts = corpus[corpus.text.notna()][["text"]]
+    con = duckdb.connect()
+    con.register("t", texts)
+    got = con.sql(f"SELECT {normalize_sql('duckdb', 'text')} AS n FROM t").df()
+    want = [normalize(t, nfd_unicode=True) for t in texts.text]
+    mism = [(t, g, w) for t, g, w in zip(texts.text, got.n, want) if g != w]
+    assert not mism, mism[:5]
 
 
 def test_spark_dialect_matches_reference_port(spark, corpus):

@@ -28,8 +28,8 @@ from dataflow_mm_lrt_spark.functions.webp import (
     encode_webp,
     plane_code_to_distance,
     prefix_encode,
-    prefix_value,
 )
+from media_fixtures import prefix_value
 
 
 def _wrap(payload: bytes) -> bytes:
