@@ -12,7 +12,8 @@ Usage::
     python bench_extra.py [--plans DIR] [--runs N] name [name ...]
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32) — same contract as bench.py.
+SPARK_GRAFT_CPUS (default: the CPUs this process may use, as
+``build_session()`` reads it; ``bench.py`` still defaults to 32).
 
 Each run is timed with ``perfbench.common.Window``: ``cpu_core_sec`` is
 the CPU time of this process tree (driver, JVM, Python workers), and
@@ -37,7 +38,6 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from dataflow_mm_lrt_spark import cache
     from dataflow_mm_lrt_spark.contract import EXTRA_QUERIES, QUERIES
@@ -45,10 +45,7 @@ def main() -> None:
     from perfbench.common import Window
 
     q = {**QUERIES, **EXTRA_QUERIES}
-    spark = build_session(
-        app_name="bench_extra", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
+    spark = build_session(app_name="bench_extra")
     spark.sparkContext.setLogLevel("ERROR")
 
     out = {}

@@ -35,8 +35,6 @@ import zlib
 
 import numpy as np
 
-from .codecs import CodecUnavailable
-
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}

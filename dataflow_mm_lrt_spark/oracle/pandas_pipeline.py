@@ -82,20 +82,20 @@ def microbatch_reference(
     roles=("system", "human", "assistant"),
     keep_tools=("search", "python", "browser"),
     neardup_threshold: int | None = None,
-    neardup_max_corpus: int = 10_000,
 ) -> pd.DataFrame:
     """Simulate the engine's micro-batch execution over an ordered file
     sequence: per batch b the watermark is max-event-time(batches < b) −
     delay; late rows (ts_ms < wm) drop; buffered rows flush once
     ts_ms + slack ≤ wm, sorted by (turn_idx, ts); keep-first dedup at
     emission. Returns the concatenation of all emissions."""
-    from ..streaming.stateful import MAX_SEEN_FPS
+    from ..streaming.neardup import MAX_CORPUS
 
     wm = 0
     buffers: dict[str, list] = {}
     rings: dict[str, list[int]] = {}  # trailing near-dup corpora (ND mode)
     # insertion-ordered dicts mirror the engine's bounded seen-set
-    # (streaming/stateful.py MAX_SEEN_FPS, oldest-emission eviction)
+    # (streaming/stateful.py MAX_SEEN_FPS = MAX_CORPUS, oldest-emission
+    # eviction)
     seen: dict[str, dict] = {}
     emit_seq: dict[str, int] = {}
     timeout_ms: dict[str, int] = {}
@@ -114,7 +114,7 @@ def microbatch_reference(
             # keep = pre-flush seen ∪ intra-flush duplicated, insert all
             # emitted fps, THEN evict once after the flush) — per-row
             # eviction mid-flush would re-admit a repeat whenever a
-            # single flush holds > MAX_SEEN_FPS distinct fingerprints
+            # single flush holds > MAX_CORPUS distinct fingerprints
             flushed: dict[str, None] = {}
             ring = rings.setdefault(conv_id, [])
             for r in ready:
@@ -130,14 +130,14 @@ def microbatch_reference(
                     if ds and min(ds) <= neardup_threshold:
                         continue
                     ring.append(h)
-                    del ring[:-neardup_max_corpus]
+                    del ring[:-MAX_CORPUS]
                 flushed[fp] = None
                 emitted_rows.append(
                     (conv_id, r[0], r[2], r[3], r[4], r[1], emit_seq.get(conv_id, 0))
                 )
                 emit_seq[conv_id] = emit_seq.get(conv_id, 0) + 1
             s.update(flushed)
-            while len(s) > MAX_SEEN_FPS:
+            while len(s) > MAX_CORPUS:
                 del s[next(iter(s))]
         # same timeout rule as streaming/stateful.py
         if remaining:

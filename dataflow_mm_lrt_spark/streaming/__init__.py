@@ -6,5 +6,6 @@ stateful ordered assembly + in-conversation dedup
 (``applyInPandasWithState`` sorted-run state, with the optional
 trailing-corpus near-dup gate) → windowed aggregates (tumbling/sliding/
 session) → stream-stream join against tool-call events → exactly-once
-manifest sink with per-partition lineage + metrics.
+sink (one atomically renamed commit manifest per epoch, with
+per-partition lineage + metrics).
 """

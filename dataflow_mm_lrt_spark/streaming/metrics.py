@@ -8,9 +8,10 @@ driver's listener bus, so recording costs nothing on the executors and
 nothing in the micro-batch critical path. Each progress event is one
 JSON line (the engine's own progress payload: input/process rates,
 batch durations, state-operator rows/memory, event-time watermark),
-appended to ``<dir>/metrics.jsonl`` — the same append-a-line shape as
-the sink's commit manifests, so a restarted query keeps extending the
-same trail and ``summarize()`` sees the full history across restarts.
+appended to ``<dir>/metrics.jsonl``, so a restarted query keeps
+extending the same trail and ``summarize()`` sees the full history
+across restarts. The recorder takes every query's events while it is
+attached; ``run_pipeline`` attaches one per drain and detaches it after.
 
 Usage::
 
@@ -34,10 +35,9 @@ from pyspark.sql.streaming import StreamingQueryListener
 class ProgressRecorder(StreamingQueryListener):
     """Append every query-progress event as one JSON line."""
 
-    def __init__(self, metrics_dir: str, query_name: str | None = None):
+    def __init__(self, metrics_dir: str):
         self.path = os.path.join(metrics_dir, "metrics.jsonl")
         os.makedirs(metrics_dir, exist_ok=True)
-        self.query_name = query_name
         self._spark: SparkSession | None = None
         self._terminated = threading.Event()
 
@@ -49,10 +49,7 @@ class ProgressRecorder(StreamingQueryListener):
         )
 
     def onQueryProgress(self, event: Any) -> None:
-        p = event.progress
-        if self.query_name and p.name != self.query_name:
-            return
-        doc = json.loads(p.json)
+        doc = json.loads(event.progress.json)
         doc["event"] = "progress"
         self._append(doc)
 
@@ -86,10 +83,8 @@ class ProgressRecorder(StreamingQueryListener):
     # -- lifecycle ---------------------------------------------------------
 
     @classmethod
-    def attach(
-        cls, spark: SparkSession, metrics_dir: str, query_name: str | None = None
-    ) -> "ProgressRecorder":
-        rec = cls(metrics_dir, query_name)
+    def attach(cls, spark: SparkSession, metrics_dir: str) -> "ProgressRecorder":
+        rec = cls(metrics_dir)
         rec._spark = spark
         spark.streams.addListener(rec)
         return rec

@@ -7,11 +7,14 @@
       → fingerprint (Catalyst md5; feeds S4 dedup)
       → S4+S6 ordered assembly + keyed keep-first dedup
               (applyInPandasWithState sorted-run state, watermark-evicted)
-      → S9 exactly-once manifest sink (foreachBatch)
+      → S9 exactly-once manifest sink (foreachBatch, one commit
+              manifest per epoch)
 
 The same stage functions run under ``readStream`` (here) and plain
 ``read`` (batch parity tests). ``availableNow`` drains the bounded
 source; re-running with the same checkpoint resumes from state.
+``run_pipeline`` always records per-batch progress (streaming/metrics.py)
+and waits for the drain to finish.
 """
 
 from __future__ import annotations
@@ -24,10 +27,12 @@ from pyspark.sql import functions as F
 
 from ..functions.text_rules import keep_sql
 from ..functions.normalize import strip_multimodal_tokens_sql
+from .metrics import ProgressRecorder
 from .sink import ManifestSink
 from .source import transcript_stream
 from .stateful import (
     DEFAULT_ORDER_SLACK_MS,
+    DEFAULT_STATE_TTL_MS,
     ordered_assembly,
     with_fingerprint,
 )
@@ -37,20 +42,10 @@ from .stateful import (
 class PipelineConfig:
     watermark_delay: str = "10 minutes"
     order_slack_ms: int = DEFAULT_ORDER_SLACK_MS
-    state_ttl_ms: int = 6 * 3600 * 1000
+    state_ttl_ms: int = DEFAULT_STATE_TTL_MS
     roles: tuple[str, ...] = ("system", "human", "assistant")
     keep_tools: tuple[str, ...] = ("search", "python", "browser")
     max_files_per_trigger: int = 1
-    #: >0 rolls loose epoch manifests into one snapshot whenever that
-    #: many accumulate (ManifestSink.compact_manifests); 0 keeps the
-    #: default one-manifest-per-epoch layout (cheapest per-epoch commit;
-    #: long-running services should set ~256)
-    manifest_compact_every: int = 0
-    #: record per-micro-batch progress (rates, durations, state size,
-    #: watermark) to <out_dir>/metrics.jsonl via a driver-side
-    #: StreamingQueryListener (streaming/metrics.py) — off the batch
-    #: critical path, restart-safe append trail
-    record_metrics: bool = True
     #: not-None adds the trailing-corpus SimHash near-dup gate
     #: (streaming/neardup.py semantics — the reference's sequential
     #: corpus-gated dedup, keyed by conv_id, bounded ring state) to the
@@ -90,25 +85,16 @@ def run_pipeline(
     input_path: str,
     out_dir: str,
     cfg: PipelineConfig = PipelineConfig(),
-    await_termination: bool = True,
 ):
     """availableNow drain of the transcript directory into the
-    exactly-once sink. Returns (sink, query)."""
+    exactly-once sink, recording per-batch progress to
+    ``<out_dir>/metrics/metrics.jsonl``. Returns (sink, query)."""
     src = transcript_stream(
         spark, input_path, max_files_per_trigger=cfg.max_files_per_trigger
     )
     out = build_pipeline(src, cfg)
-    sink = ManifestSink(
-        os.path.join(out_dir, "sink"),
-        compact_every=cfg.manifest_compact_every,
-    )
-    recorder = None
-    if cfg.record_metrics:
-        from .metrics import ProgressRecorder
-
-        recorder = ProgressRecorder.attach(
-            spark, os.path.join(out_dir, "metrics")
-        )
+    sink = ManifestSink(os.path.join(out_dir, "sink"))
+    recorder = ProgressRecorder.attach(spark, os.path.join(out_dir, "metrics"))
     try:
         query = (
             out.writeStream.outputMode("append")
@@ -117,10 +103,8 @@ def run_pipeline(
             .trigger(availableNow=True)
             .start()
         )
-        if await_termination:
-            query.awaitTermination()
+        query.awaitTermination()
     finally:
-        if recorder is not None and await_termination:
-            recorder.wait_terminated()  # listener bus drains async
-            recorder.detach()
+        recorder.wait_terminated()  # listener bus drains async
+        recorder.detach()
     return sink, query

@@ -64,6 +64,15 @@ from pyspark.sql.types import (
 
 from ..functions.normalize import fingerprint_sql
 
+# The per-conversation emitted-fingerprint set is capped at the
+# reference's max_corpus (image_diversity_filter.py:15), the same bound
+# as the near-dup ring. Without it ``seen`` grows with conversation
+# length until TTL eviction. Eviction is deterministic oldest-first in
+# EMISSION order, so a fingerprint can only be re-emitted after 10k
+# *newer* distinct turns: the reference's corpus-window forgetting.
+from .neardup import MAX_CORPUS as MAX_SEEN_FPS
+from .neardup import trailing_mark
+
 ASSEMBLED_SCHEMA = StructType(
     [
         StructField("conv_id", StringType()),
@@ -87,15 +96,6 @@ STATE_SCHEMA = StructType(
 
 DEFAULT_ORDER_SLACK_MS = 120_000
 DEFAULT_STATE_TTL_MS = 6 * 3600 * 1000
-
-#: cap on the per-conversation emitted-fingerprint set — the analogue of
-#: the reference's bounded dedup corpus (image_diversity_filter.py:15,
-#: max_corpus=10000). Without it ``seen`` grows with conversation length
-#: until TTL eviction: bounded in practice, unbounded in principle.
-#: Eviction is deterministic oldest-first in EMISSION order, so a
-#: fingerprint can only be re-emitted after 10k *newer* distinct turns —
-#: the same forgetting semantics as the reference's corpus window.
-MAX_SEEN_FPS = 10_000
 
 
 #: columnar buffer layout (r7): the buffered run is pickled as a plain
@@ -130,7 +130,6 @@ def make_assembly_func(
     state_ttl_ms: int,
     max_seen_fps: int = MAX_SEEN_FPS,
     neardup_threshold: int | None = None,
-    neardup_max_corpus: int = MAX_SEEN_FPS,
 ):
     nd = neardup_threshold is not None
 
@@ -241,11 +240,8 @@ def make_assembly_func(
                 # trailing-corpus near-dup gate (reference sequential
                 # semantics, image_diversity_filter.py:15-34): suppressed
                 # rows never enter the ring OR the seen set
-                from .neardup import trailing_mark
-
                 keep2, _, ring = trailing_mark(
-                    ready[_N_BUF_ARRS], ring,
-                    neardup_threshold, neardup_max_corpus,
+                    ready[_N_BUF_ARRS], ring, neardup_threshold
                 )
                 if not keep2.all():
                     ready = [c[keep2] for c in ready]
@@ -308,7 +304,6 @@ def ordered_assembly(
     order_slack_ms: int = DEFAULT_ORDER_SLACK_MS,
     state_ttl_ms: int = DEFAULT_STATE_TTL_MS,
     neardup_threshold: int | None = None,
-    neardup_max_corpus: int = MAX_SEEN_FPS,
 ) -> DataFrame:
     """Streaming stage: watermarked turns → ordered, deduped turns.
 
@@ -333,7 +328,6 @@ def ordered_assembly(
         order_slack_ms,
         state_ttl_ms,
         neardup_threshold=neardup_threshold,
-        neardup_max_corpus=neardup_max_corpus,
     )
     state_schema = (
         STATE_SCHEMA

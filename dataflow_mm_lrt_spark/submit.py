@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import argparse
 import os
-import sys
 import zipfile
 
 

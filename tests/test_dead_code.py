@@ -12,6 +12,9 @@ Tests are never a root: a definition only tests reach is deleted, or
 moved into ``tests/`` as a fixture. There is no allowlist beyond
 ``ROOT_MODULES``, ``ROOT_USERS`` and ``BASELINE_ROOTS``; a failure names
 the unreachable definitions and these lists. No Spark session is needed.
+
+A second guard fails on any module-level import that its module never
+uses, across the package, ``tests/``, ``tools/`` and ``bench*.py``.
 """
 
 from __future__ import annotations
@@ -166,3 +169,39 @@ def test_every_package_definition_is_reachable_from_a_root():
             "with the entry point that needs them.",
             pytrace=False,
         )
+
+
+# Files whose module-level imports must each be used.
+IMPORT_CHECKED = (f"{PKG}/**/*.py", "tests/**/*.py", "tools/**/*.py", "bench*.py")
+
+
+def unused_imports() -> list[tuple[str, int, str]]:
+    """``(relpath, line, name)`` for every module-level import binding
+    that no ``Name`` in its module reads and ``__all__`` does not list.
+    ``__future__`` imports and ``__init__.py`` re-export files are skipped."""
+    out = []
+    for rel in _files(IMPORT_CHECKED):
+        if os.path.basename(rel) == "__init__.py":
+            continue
+        with open(os.path.join(ROOT, rel), encoding="utf-8") as f:
+            tree = ast.parse(f.read(), rel)
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for stmt in tree.body:
+            if isinstance(stmt, ast.Assign) and "__all__" in _targets(stmt):
+                used |= {e.value for e in ast.walk(stmt.value) if isinstance(e, ast.Constant)}
+        for stmt in tree.body:
+            if isinstance(stmt, ast.ImportFrom) and stmt.module == "__future__":
+                continue
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                for alias in stmt.names:
+                    name = alias.asname or alias.name.split(".")[0]
+                    if name != "*" and name not in used:
+                        out.append((rel, stmt.lineno, name))
+    return out
+
+
+def test_no_unused_module_imports():
+    unused = unused_imports()
+    if unused:
+        report = "\n".join(f"{rel}:{line} {name}" for rel, line, name in unused)
+        pytest.fail(f"{len(unused)} unused module-level imports:\n{report}", pytrace=False)

@@ -6,7 +6,6 @@ duplicate-score blocks that stress the boundary-band tie logic)."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import Window

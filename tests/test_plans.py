@@ -10,7 +10,6 @@
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import functions as F
 
 from dataflow_mm_lrt_spark.contract import EXTRA_QUERIES
 from dataflow_mm_lrt_spark.contract import QUERIES as _DRIVER_QUERIES

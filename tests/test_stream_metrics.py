@@ -7,7 +7,6 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 
 from dataflow_mm_lrt_spark.datagen import (
     GenSpec,

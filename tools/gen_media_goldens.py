@@ -30,7 +30,6 @@ Three goldens, three independence stories:
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 
