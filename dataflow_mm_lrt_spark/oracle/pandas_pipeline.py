@@ -20,6 +20,7 @@ import hashlib
 
 import pandas as pd
 
+from ..streaming.stateful import DEFAULT_STATE_TTL_MS
 from .reference_port import apply_text_filters, normalize, parse_multimodal_tokens
 
 
@@ -82,12 +83,19 @@ def microbatch_reference(
     roles=("system", "human", "assistant"),
     keep_tools=("search", "python", "browser"),
     neardup_threshold: int | None = None,
+    state_ttl_ms: int = DEFAULT_STATE_TTL_MS,
 ) -> pd.DataFrame:
     """Simulate the engine's micro-batch execution over an ordered file
     sequence: per batch b the watermark is max-event-time(batches < b) −
-    delay; late rows (ts_ms < wm) drop; buffered rows flush once
+    delay; Spark drops rows at or below the previous batch's watermark
+    before the state function, and a conversation with any row left is
+    stepped; late rows (ts_ms < wm) drop; buffered rows flush once
     ts_ms + slack ≤ wm, sorted by (turn_idx, ts); keep-first dedup at
-    emission. Returns the concatenation of all emissions."""
+    emission. A conversation without rows is stepped once its timeout
+    is below the watermark (Spark's rule); such a step with an empty
+    buffer evicts its state once wm ≥ last event time + ``state_ttl_ms``,
+    so ``emit_seq`` restarts at 0. Returns the concatenation of all
+    emissions."""
     from ..streaming.neardup import MAX_CORPUS
 
     wm = 0
@@ -98,11 +106,12 @@ def microbatch_reference(
     # eviction)
     seen: dict[str, dict] = {}
     emit_seq: dict[str, int] = {}
+    last_ts_ms: dict[str, int] = {}
     timeout_ms: dict[str, int] = {}
     emitted_rows = []
     max_event_ms = 0
 
-    def flush(conv_id: str):
+    def flush(conv_id: str, timed_out: bool):
         buf = buffers.get(conv_id, [])
         ready = [r for r in buf if r[1] // 1000 + order_slack_ms <= wm]
         remaining = [r for r in buf if r[1] // 1000 + order_slack_ms > wm]
@@ -139,15 +148,21 @@ def microbatch_reference(
             s.update(flushed)
             while len(s) > MAX_CORPUS:
                 del s[next(iter(s))]
-        # same timeout rule as streaming/stateful.py
+        # same timeout and TTL-eviction rules as streaming/stateful.py
+        last = last_ts_ms.get(conv_id, 0)
         if remaining:
             nxt = min(r[1] for r in remaining) // 1000 + order_slack_ms
+        elif timed_out and wm >= last + state_ttl_ms:
+            for d in (buffers, rings, seen, emit_seq, last_ts_ms, timeout_ms):
+                d.pop(conv_id, None)
+            return
         else:
-            nxt = 1 << 62
+            nxt = last + state_ttl_ms
         timeout_ms[conv_id] = max(nxt, wm + 1)
 
     # one trailing empty batch so the final watermark update can fire
     # timeouts (availableNow runs a state-cleanup batch after the data)
+    prev_wm = 0
     for pdf in list(file_pdfs) + [None]:
         touched = set()
         if pdf is not None:
@@ -157,20 +172,27 @@ def microbatch_reference(
             )
             batch = batch.assign(ts_us=ts_us)
             for row in batch.itertuples(index=False):
+                if row.ts_us <= prev_wm * 1000:
+                    continue  # Spark's own late filter (previous watermark)
+                touched.add(row.conv_id)
+                buffers.setdefault(row.conv_id, [])
                 if row.ts_us // 1000 < wm:
                     continue  # beyond-watermark late drop
-                buffers.setdefault(row.conv_id, []).append(
+                buffers[row.conv_id].append(
                     (int(row.turn_idx), int(row.ts_us), row.role, row.text, row.tool)
                 )
-                touched.add(row.conv_id)
+                last_ts_ms[row.conv_id] = max(
+                    last_ts_ms.get(row.conv_id, 0), int(row.ts_us) // 1000
+                )
             for conv_id in sorted(touched):
-                flush(conv_id)
+                flush(conv_id, timed_out=False)
             if len(batch):
                 max_event_ms = max(max_event_ms, int(batch["ts_us"].max() // 1000))
         # timed-out groups (no data this batch) flush with the batch's wm
-        for conv_id in sorted(buffers):
-            if conv_id not in touched and timeout_ms.get(conv_id, 1 << 62) <= wm:
-                flush(conv_id)
+        for conv_id in sorted(timeout_ms):
+            if conv_id not in touched and timeout_ms[conv_id] < wm:
+                flush(conv_id, timed_out=True)
+        prev_wm = wm
         wm = max(wm, max_event_ms - watermark_delay_ms)
 
     out = pd.DataFrame(

@@ -22,11 +22,27 @@ eviction (BASELINE.json north_star), via ``applyInPandasWithState``:
   (bounded state; the streaming analogue of the reference's
   max_corpus=10000 bound, image_diversity_filter.py:15).
 
-The group function is Arrow-batched and numpy-vectorized. Outside the
-optional near-dup gate, three steps run Python per row: ``_fp_key``
-once per fresh row (the state key of its fingerprint), the keep-first
-membership loop once per ready row, and the pickle of the bounded
-buffer.
+The operator is keyed by hash bucket, ``pmod(xxhash64(conv_id),
+N_BUCKETS)``, not by conversation: Spark's Python state runner costs a
+few ms per group call whatever the body does, so one call serves every
+conversation of a bucket. A bucket's state holds its conversations'
+runs side by side: one buffer of rows tagged with a conversation code,
+and per-conversation ``emit_seq``, last event time, timeout, ``seen``
+list and (near-dup) ring. Every semantic above stays per conversation.
+A conversation without rows in a call is stepped only when its own
+timeout fired under Spark's rule (``timeout < watermark``); the bucket's
+timeout is the minimum over its conversations.
+
+``assemble_bucket`` is the kernel: (bucket, new rows, watermark) →
+(emitted rows, new bucket, next timeout), numpy-vectorized over the
+bucket — one factorize of the new rows' conv_ids, one lexsort of the
+ready rows by (conversation, turn_idx, ts), one output frame; late
+drop, readiness, timeouts and TTL eviction are array operations.
+Outside the optional near-dup gate, two steps run Python per row:
+``_fp_key`` once per fresh row (the state key of its fingerprint) and
+the keep-first membership loop once per ready row. Per flushed
+conversation, Python builds its ``seen`` set (and runs its near-dup
+ring); the bucket is pickled whole on every call.
 Emission is deterministic for a fixed input stream + watermark sequence
 — the contract pytest replays (FIXTURES.md §4).
 
@@ -46,6 +62,7 @@ from __future__ import annotations
 
 import pickle
 from collections.abc import Iterator
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -85,27 +102,49 @@ ASSEMBLED_SCHEMA = StructType(
     ]
 )
 
+#: one bucket's state: the bucket count it was keyed with, the pickled
+#: ``Bucket`` (without rings) and, near-dup only, the pickled rings
 STATE_SCHEMA = StructType(
     [
-        StructField("buf", BinaryType()),
-        StructField("seen", BinaryType()),
-        StructField("emit_seq", LongType()),
-        StructField("last_ts_ms", LongType()),
+        StructField("n_buckets", IntegerType()),
+        StructField("bucket", BinaryType()),
     ]
 )
 
 DEFAULT_ORDER_SLACK_MS = 120_000
 DEFAULT_STATE_TTL_MS = 6 * 3600 * 1000
 
+#: state key = pmod(xxhash64(conv_id), N_BUCKETS). Fewer buckets save
+#: more runner calls on a bulk drain, but a live batch re-pickles every
+#: conversation of each bucket it touches (≈1/K of the live state).
+#: Changing it needs a fresh checkpoint: the key schema stays the same,
+#: so a stored bucket count is checked.
+N_BUCKETS = 64
 
-#: columnar buffer layout (r7): the buffered run is pickled as a plain
-#: tuple of numpy arrays — (turn_idx i8, ts_us i8, role, text, tool, fp
-#: object[, simhash i8]) — instead of a pandas DataFrame. A DataFrame
-#: pickle carries index/block-manager overhead (~7.9 KB per buffered row
-#: measured in BENCH_r06) and its construction/concat dominated the
-#: per-group Python cost; bare ndarrays pickle as buffers. A state in
-#: any other layout (DataFrame buffer, dict/set ``seen``) is refused.
-_N_BUF_ARRS = 6
+_I8 = np.empty(0, dtype=np.int64)
+_OBJ = np.empty(0, dtype=object)
+
+
+class Bucket(NamedTuple):
+    """The conversations of one bucket. Per-conversation arrays are
+    aligned with ``convs`` (sorted conv_ids); ``buf`` is the buffered
+    rows of all of them: (conversation code = index into ``convs``,
+    turn_idx, ts_us, role, text, tool, fp key[, simhash]), in arrival
+    order within each conversation. ``rings`` is None without near-dup."""
+
+    convs: np.ndarray
+    emit_seq: np.ndarray
+    last_ts_ms: np.ndarray
+    timeout_ms: np.ndarray
+    seen: list
+    buf: tuple
+    rings: list | None
+
+
+def empty_bucket(nd: bool) -> Bucket:
+    buf = (_I8, _I8, _I8, _OBJ, _OBJ, _OBJ, _OBJ) + ((_I8,) if nd else ())
+    return Bucket(_OBJ, _I8, _I8, _I8, [], buf, [] if nd else None)
+
 
 _HEX_DEL = str.maketrans("", "", "0123456789abcdef")
 
@@ -125,66 +164,69 @@ def _fp_key(f):
     return f
 
 
-def make_assembly_func(
+def _admit(b: Bucket, uniq: np.ndarray) -> tuple[Bucket, np.ndarray]:
+    """``b`` widened by the conv_ids of ``uniq`` it lacks, and the index
+    of each ``uniq`` entry in the widened ``convs``."""
+    pos = np.searchsorted(b.convs, uniq)
+    known = pos < len(b.convs)
+    known[known] = b.convs[pos[known]] == uniq[known]
+    if known.all():
+        return b, pos
+    convs = np.unique(np.concatenate([b.convs, uniq[~known]]))
+    old = np.searchsorted(convs, b.convs)
+    k = len(convs)
+
+    def widen(a):
+        w = np.zeros(k, dtype=np.int64)
+        w[old] = a
+        return w
+
+    def widen_list(lst, empty):
+        w = [empty] * k
+        for i, j in enumerate(old.tolist()):
+            w[j] = lst[i]
+        return w
+
+    b = Bucket(
+        convs,
+        widen(b.emit_seq),
+        widen(b.last_ts_ms),
+        widen(b.timeout_ms),
+        widen_list(b.seen, []),
+        (old[b.buf[0]],) + b.buf[1:],
+        None if b.rings is None else widen_list(b.rings, _I8),
+    )
+    return b, np.searchsorted(convs, uniq)
+
+
+def assemble_bucket(
+    b: Bucket,
+    frames: list[pd.DataFrame],
+    wm: int,
     order_slack_ms: int,
     state_ttl_ms: int,
     max_seen_fps: int = MAX_SEEN_FPS,
     neardup_threshold: int | None = None,
-):
+) -> tuple[pd.DataFrame | None, Bucket | None, int | None]:
+    """One call of the assembly over one bucket at watermark ``wm``:
+    returns (emitted rows or None, new bucket or None when every
+    conversation was evicted, the bucket's next timeout). ``frames``
+    are this call's rows (any conv_ids); ``b`` is not modified."""
     nd = neardup_threshold is not None
-
-    ncols = _N_BUF_ARRS + (1 if nd else 0)
-
-    def assemble(
-        key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        conv_id = key[0]
-        ring = np.empty(0, dtype=np.int64)
-        if state.exists:
-            if nd:
-                buf_b, seen_b, emit_seq, last_ts_ms, ring_b = state.get
-                ring = pickle.loads(ring_b)
-            else:
-                buf_b, seen_b, emit_seq, last_ts_ms = state.get
-            cols = pickle.loads(buf_b)
-            # seen: an emission-ordered LIST of compact keys (_fp_key) —
-            # a dict of hex strings pickled at ~57 B/entry and dominated
-            # state_bytes_peak (BENCH_r06); the digest list is ~20 B
-            seen_list = pickle.loads(seen_b)
-            if not (isinstance(cols, tuple) and isinstance(seen_list, list)):
-                raise ValueError(
-                    f"state of conv_id={conv_id!r} holds a "
-                    f"{type(cols).__name__} buffer and a "
-                    f"{type(seen_list).__name__} seen set: the checkpoint "
-                    "predates the columnar state layout (tuple of arrays + "
-                    "list of keys); start from a fresh checkpoint"
-                )
-            seen = set(seen_list)
-        else:
-            cols = tuple(
-                np.empty(0, dtype=np.int64) if i in (0, 1, _N_BUF_ARRS)
-                else np.empty(0, dtype=object)
-                for i in range(ncols)
-            )
-            seen_list, seen = [], set()
-            emit_seq, last_ts_ms = 0, 0
-
-        wm = state.getCurrentWatermarkMs()
-
-        chunks = [cols]
-        for pdf in pdf_iter:
-            if state.hasTimedOut or len(pdf) == 0:
-                continue
-            ts_us = (
-                pdf["ts"].to_numpy(dtype="datetime64[ns]").astype(np.int64)
-                // 1_000
-            )
-            late = ts_us // 1000 >= wm  # deterministic late drop
-            n_fresh = int(late.sum())
-            if n_fresh == 0:
-                continue
-            all_fresh = n_fresh == len(ts_us)
-            fresh_cols = [
+    data = np.zeros(len(b.convs), dtype=bool)
+    if frames:
+        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        codes, uniq = pd.factorize(
+            pdf["conv_id"].to_numpy(dtype=object), use_na_sentinel=False
+        )
+        b, pos = _admit(b, uniq)
+        data = np.zeros(len(b.convs), dtype=bool)
+        data[pos] = True
+        ts_us = pdf["ts"].to_numpy(dtype="datetime64[ns]").astype(np.int64) // 1_000
+        fresh = ts_us // 1000 >= wm  # deterministic late drop
+        if fresh.any():
+            cols = [
+                pos[codes],
                 pdf["turn_idx"].to_numpy(dtype=np.int64),
                 ts_us,
                 pdf["role"].to_numpy(),
@@ -193,100 +235,164 @@ def make_assembly_func(
                 pdf["fp"].to_numpy(),
             ]
             if nd:
-                fresh_cols.append(pdf["simhash"].to_numpy(dtype=np.int64))
-            if not all_fresh:
-                fresh_cols = [c[late] for c in fresh_cols]
+                cols.append(pdf["simhash"].to_numpy(dtype=np.int64))
+            if not fresh.all():
+                cols = [c[fresh] for c in cols]
             # buffer the compact state key, not the 32-char hex string —
             # buffered fps are the state's largest per-row payload after
             # the text itself (state peaks while the watermark trails,
             # when every arriving turn is buffered)
-            fps = np.empty(len(fresh_cols[5]), dtype=object)
-            fps[:] = [_fp_key(f) for f in fresh_cols[5]]
-            fresh_cols[5] = fps
-            chunks.append(tuple(fresh_cols))
-            last_ts_ms = max(last_ts_ms, int(fresh_cols[1].max() // 1000))
-        if len(chunks) > 1:
-            cols = tuple(
-                np.concatenate([c[i] for c in chunks]) for i in range(ncols)
+            fps = np.empty(len(cols[6]), dtype=object)
+            fps[:] = [_fp_key(f) for f in cols[6]]
+            cols[6] = fps
+            last_ts_ms = b.last_ts_ms.copy()
+            np.maximum.at(last_ts_ms, cols[0], cols[2] // 1000)
+            b = b._replace(
+                last_ts_ms=last_ts_ms,
+                buf=tuple(np.concatenate([o, n]) for o, n in zip(b.buf, cols)),
             )
+    # Spark fires a key's timeout only while it gets no rows and
+    # timeout < watermark; a conversation stepped that way may be evicted
+    fired = ~data & (b.timeout_ms < wm)
+    stepped = data | fired
 
-        turn_idx, ts_us = cols[0], cols[1]
-        ready_mask = (ts_us // 1000 + order_slack_ms) <= wm
-        out = None
-        if ready_mask.any():
-            keep_buf = ~ready_mask
-            ready = [c[ready_mask] for c in cols]
-            cols = tuple(c[keep_buf] for c in cols)
-            # stable (turn_idx, ts_us) order — np.lexsort's last key is
-            # primary and it is stable, matching the mergesort sort_values
-            order = np.lexsort((ready[1], ready[0]))
-            ready = [c[order] for c in ready]
+    buf = b.buf
+    ready = stepped[buf[0]] & (buf[2] // 1000 + order_slack_ms <= wm)
+    emit_seq, seen, rings = b.emit_seq, b.seen, b.rings
+    out = None
+    if ready.any():
+        rd = [c[ready] for c in buf]
+        buf = tuple(c[~ready] for c in buf)
+        # stable (conversation, turn_idx, ts_us) order — np.lexsort's
+        # last key is primary and it is stable, so ties keep arrival order
+        order = np.lexsort((rd[2], rd[1], rd[0]))
+        rd = [c[order] for c in rd]
+        code = rd[0]
+        n = len(code)
+        keep = np.ones(n, dtype=bool)
+        starts = np.flatnonzero(np.r_[True, code[1:] != code[:-1]]).tolist()
+        digs = rd[6].tolist()
+        seen, rings = list(seen), None if rings is None else list(rings)
+        for s, e in zip(starts, starts[1:] + [n]):
+            k = int(code[s])
             # keep-first dedup: drop already-seen fps and intra-flush
-            # repeats (buffer already holds compact keys, see _fp_key)
-            digs = ready[5]
-            keep = np.empty(len(digs), dtype=bool)
-            newly: set[bytes] = set()
-            add = newly.add
-            for i, d in enumerate(digs):
-                if d in seen or d in newly:
+            # repeats (the buffer already holds compact keys, _fp_key)
+            have = set(seen[k])
+            for i in range(s, e):
+                d = digs[i]
+                if d in have:
                     keep[i] = False
                 else:
-                    keep[i] = True
-                    add(d)
-            if not keep.all():
-                ready = [c[keep] for c in ready]
-                digs = digs[keep]
-            if nd and len(ready[0]):
+                    have.add(d)
+            if nd:
                 # trailing-corpus near-dup gate (reference sequential
                 # semantics, image_diversity_filter.py:15-34): suppressed
                 # rows never enter the ring OR the seen set
-                keep2, _, ring = trailing_mark(
-                    ready[_N_BUF_ARRS], ring, neardup_threshold
-                )
-                if not keep2.all():
-                    ready = [c[keep2] for c in ready]
-                    digs = digs[keep2]
-            n_emit = len(ready[0])
-            seen_list.extend(digs.tolist())
-            # bounded state: deterministic oldest-first (emission-order)
-            # eviction at the reference's max_corpus=10000 analogue
-            if len(seen_list) > max_seen_fps:
-                seen_list = seen_list[len(seen_list) - max_seen_fps :]
-            if n_emit:
-                out = pd.DataFrame(
-                    {
-                        "conv_id": np.repeat(conv_id, n_emit),
-                        "turn_idx": ready[0].astype("int32"),
-                        "role": ready[2],
-                        "text": ready[3],
-                        "tool": ready[4],
-                        "ts": ready[1].astype("datetime64[us]").astype(
-                            "datetime64[ns]"
-                        ),
-                        "emit_seq": np.arange(
-                            emit_seq, emit_seq + n_emit, dtype="int64"
-                        ),
-                    }
-                )
-                emit_seq += n_emit
+                idx = s + np.flatnonzero(keep[s:e])
+                if len(idx):
+                    k2, _, rings[k] = trailing_mark(
+                        rd[7][idx], rings[k], neardup_threshold
+                    )
+                    keep[idx[~k2]] = False
+            kept = [d for d, ok in zip(digs[s:e], keep[s:e]) if ok]
+            if kept:
+                # bounded state: deterministic oldest-first (emission
+                # order) eviction at the reference's max_corpus analogue
+                lst = seen[k] + kept
+                seen[k] = lst[max(len(lst) - max_seen_fps, 0) :]
+        if not keep.all():
+            rd = [c[keep] for c in rd]
+        code = rd[0]
+        n_emit = len(code)
+        if n_emit:
+            cnt = np.bincount(code, minlength=len(b.convs))
+            first = np.cumsum(cnt) - cnt
+            out = pd.DataFrame(
+                {
+                    "conv_id": b.convs[code],
+                    "turn_idx": rd[1].astype("int32"),
+                    "role": rd[3],
+                    "text": rd[4],
+                    "tool": rd[5],
+                    "ts": rd[2].astype("datetime64[us]").astype("datetime64[ns]"),
+                    "emit_seq": emit_seq[code] + np.arange(n_emit) - first[code],
+                }
+            )
+            emit_seq = emit_seq + cnt
 
-        n_buf = len(cols[0])
-        if n_buf == 0 and state.hasTimedOut and wm >= last_ts_ms + state_ttl_ms:
+    # per stepped conversation: next timeout is the oldest buffered turn's
+    # readiness, or TTL past its last event time when nothing is buffered
+    n_buf = np.bincount(buf[0], minlength=len(b.convs))
+    nxt = b.last_ts_ms + state_ttl_ms
+    has = n_buf > 0
+    if has.any():
+        oldest = np.full(len(b.convs), np.iinfo(np.int64).max)
+        np.minimum.at(oldest, buf[0], buf[2] // 1000)
+        nxt[has] = oldest[has] + order_slack_ms
+    timeout_ms = np.where(stepped, np.maximum(nxt, wm + 1), b.timeout_ms)
+    b = Bucket(b.convs, emit_seq, b.last_ts_ms, timeout_ms, seen, buf, rings)
+
+    evict = fired & ~has & (wm >= b.last_ts_ms + state_ttl_ms)
+    if evict.any():
+        if evict.all():
+            return out, None, None
+        live = ~evict
+        b = Bucket(
+            b.convs[live],
+            b.emit_seq[live],
+            b.last_ts_ms[live],
+            b.timeout_ms[live],
+            [x for x, ok in zip(b.seen, live) if ok],
+            ((np.cumsum(live) - 1)[buf[0]],) + buf[1:],
+            None if rings is None else [x for x, ok in zip(rings, live) if ok],
+        )
+    return out, b, int(b.timeout_ms.min())
+
+
+def make_assembly_func(
+    order_slack_ms: int,
+    state_ttl_ms: int,
+    max_seen_fps: int = MAX_SEEN_FPS,
+    neardup_threshold: int | None = None,
+):
+    """The ``applyInPandasWithState`` function: a thin ``GroupState``
+    adapter around ``assemble_bucket``. The key is not read (rows carry
+    their ``conv_id``), so a key of one conversation also works."""
+    nd = neardup_threshold is not None
+
+    def assemble(
+        key, pdf_iter: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        frames = [p for p in pdf_iter if len(p)]
+        if state.exists:
+            n_buckets, blob, *ring = state.get
+            if n_buckets != N_BUCKETS:
+                raise ValueError(
+                    f"state of key {key!r} was written with {n_buckets} "
+                    f"buckets, this build keys by {N_BUCKETS}: the "
+                    "conversations would map to other buckets; start from "
+                    "a fresh checkpoint"
+                )
+            b = Bucket(*pickle.loads(blob), pickle.loads(ring[0]) if nd else None)
+        else:
+            b = empty_bucket(nd)
+        out, b, timeout_ms = assemble_bucket(
+            b,
+            frames,
+            state.getCurrentWatermarkMs(),
+            order_slack_ms,
+            state_ttl_ms,
+            max_seen_fps,
+            neardup_threshold,
+        )
+        if b is None:
             state.remove()
         else:
-            fields = [
-                pickle.dumps(cols), pickle.dumps(seen_list),
-                emit_seq, last_ts_ms,
-            ]
+            fields = [N_BUCKETS, pickle.dumps(tuple(b[:6]))]
             if nd:
-                fields.append(pickle.dumps(ring))
+                fields.append(pickle.dumps(b.rings))
             state.update(tuple(fields))
-            if n_buf:
-                nxt = int(cols[1].min() // 1000) + order_slack_ms
-            else:
-                nxt = last_ts_ms + state_ttl_ms
-            state.setTimeoutTimestamp(max(nxt, wm + 1))
-
+            state.setTimeoutTimestamp(timeout_ms)
         if out is not None:
             yield out
 
@@ -332,11 +438,12 @@ def ordered_assembly(
     state_schema = (
         STATE_SCHEMA
         if neardup_threshold is None
-        else StructType(STATE_SCHEMA.fields + [StructField("ring", BinaryType())])
+        else StructType(STATE_SCHEMA.fields + [StructField("rings", BinaryType())])
     )
     return (
-        turns.withWatermark("ts", watermark_delay)
-        .groupBy("conv_id")
+        turns.withColumn("bucket", F.pmod(F.xxhash64("conv_id"), F.lit(N_BUCKETS)))
+        .withWatermark("ts", watermark_delay)
+        .groupBy("bucket")
         .applyInPandasWithState(
             func,
             outputStructType=ASSEMBLED_SCHEMA,

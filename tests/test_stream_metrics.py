@@ -15,10 +15,12 @@ from dataflow_mm_lrt_spark.datagen import (
 )
 from dataflow_mm_lrt_spark.streaming.metrics import read_metrics, summarize
 from dataflow_mm_lrt_spark.streaming.run import PipelineConfig, run_pipeline
+from dataflow_mm_lrt_spark.streaming.stateful import N_BUCKETS
 
 
-def _mk_dataset(tmp_path, n_convs=30, n_files=4):
-    tr = generate_transcripts(GenSpec(n_convs=n_convs))
+def _mk_dataset(tmp_path, n_convs=30, n_files=4, tr=None):
+    if tr is None:
+        tr = generate_transcripts(GenSpec(n_convs=n_convs))
     d = tmp_path / "transcripts"
     os.makedirs(d)
     import pyarrow as pa
@@ -83,3 +85,16 @@ def test_trail_extends_across_restart(spark, tmp_path):
     second = summarize(os.path.join(out, "metrics"))
     assert second["runs"] == first["runs"] + 1
     assert second["batches"] >= first["batches"]
+
+
+def test_state_rows_bounded_by_bucket_count(spark, transcripts_pdf, tmp_path):
+    """The assembly state holds one row per hash bucket, not one per
+    conversation: draining the 80-conversation fixture never records
+    more than N_BUCKETS state rows."""
+    assert transcripts_pdf["conv_id"].nunique() > N_BUCKETS
+    in_dir, _ = _mk_dataset(tmp_path, tr=transcripts_pdf)
+    out = str(tmp_path / "out")
+    cfg = PipelineConfig(watermark_delay="72 hours", max_files_per_trigger=2)
+    run_pipeline(spark, in_dir, out, cfg)
+    stats = summarize(os.path.join(out, "metrics"))
+    assert 0 < stats["state_rows_peak"] <= N_BUCKETS, stats

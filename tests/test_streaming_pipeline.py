@@ -6,7 +6,9 @@
 * checkpoint restart: two half-runs against one checkpoint == single
   full run;
 * exactly-once: re-draining the same input is a no-op; sink manifests
-  carry per-partition lineage.
+  carry per-partition lineage;
+* a checkpoint whose assembly state is keyed per conversation does not
+  restart under the hash-bucket key.
 """
 
 from __future__ import annotations
@@ -24,7 +26,18 @@ from dataflow_mm_lrt_spark.datagen import (
     generate_transcripts,
 )
 from dataflow_mm_lrt_spark.oracle.pandas_pipeline import batch_reference
-from dataflow_mm_lrt_spark.streaming.run import PipelineConfig, run_pipeline
+from dataflow_mm_lrt_spark.streaming.run import (
+    PipelineConfig,
+    build_pipeline,
+    clean_stages,
+    run_pipeline,
+)
+from dataflow_mm_lrt_spark.streaming.source import transcript_stream
+from dataflow_mm_lrt_spark.streaming.stateful import (
+    ASSEMBLED_SCHEMA,
+    STATE_SCHEMA,
+    make_assembly_func,
+)
 
 # lossless contract: the watermark delay must exceed the dataset's total
 # arrival disorder (rows are emitted in globally shuffled order over a
@@ -136,3 +149,42 @@ def test_manifest_lineage(spark, dataset, tmp_path):
         assert sum(p["rows"] for p in m["partitions"]) == m["n_rows"]
         if m["n_rows"]:
             assert m["ts_min"] is not None and m["ts_max"] is not None
+
+
+def test_per_conversation_checkpoint_refused(spark, dataset, tmp_path):
+    """State keyed by conv_id (the layout before hash buckets) meets the
+    bucket key on restart: Spark refuses the changed key schema before
+    any state reaches Python."""
+    from pyspark.errors import StreamingQueryException
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    d, _ = dataset
+    src, files = d / "transcripts", sorted(os.listdir(d / "transcripts"))
+    in_dir, ck = tmp_path / "in", str(tmp_path / "checkpoint")
+    os.makedirs(in_dir)
+
+    def drain(df):
+        q = (
+            df.writeStream.format("noop")
+            .option("checkpointLocation", ck)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    shutil.copy2(src / files[0], in_dir / files[0])
+    turns = clean_stages(transcript_stream(spark, str(in_dir)), CFG)
+    drain(
+        turns.withWatermark("ts", CFG.watermark_delay)
+        .groupBy("conv_id")
+        .applyInPandasWithState(
+            make_assembly_func(CFG.order_slack_ms, CFG.state_ttl_ms),
+            ASSEMBLED_SCHEMA,
+            STATE_SCHEMA,
+            "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+    shutil.copy2(src / files[1], in_dir / files[1])
+    with pytest.raises(StreamingQueryException, match="STATE_STORE_KEY_SCHEMA_NOT_COMPATIBLE"):
+        drain(build_pipeline(transcript_stream(spark, str(in_dir)), CFG))
